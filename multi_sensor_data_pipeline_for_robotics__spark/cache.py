@@ -1,12 +1,11 @@
 """Size-gated persistence for multi-consumer intermediates.
 
 Several operators feed one prepared intermediate to TWO consumers (an
-as-of fill window + its per-bucket edge aggregation; an LSH signature
-table + its self-join sides). Without intervention Spark recomputes the
-whole upstream prep once per consumer; ``persist()`` materializes it
-once — but a persist is also a materialization barrier that defeats
-pipelining and whole-stage codegen across the boundary, and writes every
-row to block storage.
+LSH signature table + its self-join sides). Without intervention Spark
+recomputes the whole upstream prep once per consumer; ``persist()``
+materializes it once — but a persist is also a materialization barrier
+that defeats pipelining and whole-stage codegen across the boundary, and
+writes every row to block storage.
 
 Which side wins is a function of upstream size (measured on the round-4
 → round-5 bench A/B at sf0.1: unconditional MEMORY_AND_DISK persists
@@ -43,6 +42,29 @@ from pyspark.sql import DataFrame
 DEFAULT_PERSIST_MIN_BYTES = 1 << 30
 
 
+def local_file_sizes(df: DataFrame) -> list[int] | None:
+    """Byte sizes of the files feeding ``df``'s scan, from one
+    ``inputFiles()`` call: ``[]`` for a plan with no file scan, None
+    when any file is not locally stat-able (remote FS, vanished file)
+    or the plan cannot list its inputs."""
+    from urllib.parse import unquote, urlparse
+
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    sizes = []
+    for f in files:
+        p = urlparse(f)
+        if p.scheme not in ("", "file"):
+            return None
+        try:
+            sizes.append(os.path.getsize(unquote(p.path)))
+        except OSError:
+            return None
+    return sizes
+
+
 def estimated_source_bytes(df: DataFrame) -> int | None:
     """Total size of the locally stat-able files feeding ``df``'s scan.
 
@@ -52,22 +74,8 @@ def estimated_source_bytes(df: DataFrame) -> int | None:
     ``spark.range`` / in-memory relation) estimates 0: its recompute is
     CPU-only and cheap relative to a persist barrier.
     """
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(unquote(p.path))
-        except OSError:
-            return None
-    return total
+    sizes = local_file_sizes(df)
+    return None if sizes is None else sum(sizes)
 
 
 def estimated_source_rows(
@@ -81,22 +89,10 @@ def estimated_source_rows(
     parquet footers would otherwise dominate and inflate the estimate
     by orders of magnitude. Returns None when sizes aren't stat-able.
     """
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
+    sizes = local_file_sizes(df)
+    if sizes is None:
         return None
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("", "file"):
-            return None
-        try:
-            total += max(0, os.path.getsize(unquote(p.path)) - per_file_overhead)
-        except OSError:
-            return None
-    return total // bytes_per_row
+    return sum(max(0, s - per_file_overhead) for s in sizes) // bytes_per_row
 
 
 def auto_bucket_cap(df: DataFrame, bytes_per_row: int = 512) -> int:

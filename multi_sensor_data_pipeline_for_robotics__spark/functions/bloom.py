@@ -84,6 +84,13 @@ def bloom_might_contain(
     """Membership-test Column over the broadcast literal word array —
     ANDs the k probed bits via ``getbit``; pure codegen, no UDF.
 
+    A NULL ``key`` returns FALSE, never NULL, under the default md5
+    positions: md5 of NULL is NULL and each probed bit is coalesced to
+    FALSE, so NULL keys are filtered out (they could not equi-join
+    anyway). Under ``hash_fn="xxhash64"`` a NULL key still hashes to
+    fixed positions (Spark's hash skips NULL inputs), so it may return
+    TRUE — a false positive the later join drops.
+
     ``hash_fn`` MUST match the one the bitmap was built with
     (:func:`bloom_build`'s ``hash_fn``): probing an xxhash64-built
     bitmap with md5 positions (or vice versa) yields silent FALSE

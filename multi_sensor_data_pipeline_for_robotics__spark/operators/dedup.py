@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 import os
 
 from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-    DEFAULT_PERSIST_MIN_BYTES,
     auto_bucket_cap,
     estimated_source_bytes,
     maybe_persist,

@@ -18,12 +18,14 @@ Scale design (the reference is O(|log|·|grid|) interpreted Python):
     grid is born distributed. (``F.sequence`` would build one giant
     array on a single row: fine for 500 points, fatal for the 10^8-point
     grids a 100 TB run implies.)
-  - ``asof_align`` is the union-tag + window trick, made horizontally
-    scalable by time-bucketing: rows are hash-free range-bucketed on
-    time, each bucket fills independently under a window, and a tiny
-    per-bucket "carry" table (num_buckets rows, broadcast) transports
-    the last observation across bucket boundaries. No single-partition
-    global window, no O(n·m) loop — one range shuffle per sensor.
+  - ``asof_align_multi`` is the single as-of engine for every method
+    (``asof_align`` is its one-sensor front door): the union-tag +
+    window trick, made horizontally scalable by time-bucketing: rows
+    are hash-free range-bucketed on time, each bucket fills
+    independently under a window, and a tiny per-bucket "carry" table
+    (num_buckets rows, broadcast) transports the last observation
+    across bucket boundaries. No single-partition global window, no
+    O(n·m) loop — one range shuffle for all sensors.
   - ``map_events`` exploits grid uniformity: the nearest grid point of
     an event is closed-form integer arithmetic on microseconds — a pure
     narrow projection (no join, no shuffle) followed by one aggregation.
@@ -52,6 +54,7 @@ from multi_sensor_data_pipeline_for_robotics__spark.functions.timeutil import ts
 GRID_STEP_MS = 33  # app.py:160-161
 EVENT_TOLERANCE_MS = 100  # app.py:185
 DEFAULT_NUM_BUCKETS = 128
+ASOF_METHODS = ("pad", "backfill", "nearest", "interp")
 
 
 def _us(ts: dt.datetime) -> int:
@@ -123,11 +126,12 @@ def asof_align(
     method='interp'   linear time-interpolation between the two
                       (value columns become DOUBLE)
 
-    Implementation: union-tag + per-time-bucket window + broadcast
-    cross-bucket carry (see module docstring). Output: one row per grid
-    timestamp with ``{prefix}{col}`` value columns plus
-    ``{prefix}__matched_ts`` (the matched observation time; NULL when no
-    observation exists on that side).
+    A one-sensor front door to :func:`asof_align_multi`, the single
+    as-of engine: every method runs its union-tag + per-time-bucket
+    window + broadcast cross-bucket carry (see module docstring).
+    Output: one row per grid timestamp with ``{prefix}{col}`` value
+    columns plus ``{prefix}__matched_ts`` (the matched observation
+    time; NULL when no observation exists on that side).
 
     ``bounds``: known (lo, hi) covering the grid — skips the bounds-
     discovery job (callers like ``synchronize`` already hold the window
@@ -138,119 +142,18 @@ def asof_align(
     match farther than this from the grid point is nulled out (a cheap
     post-projection; the align itself is unchanged).
     """
-    if method in ("nearest", "interp"):
-        # fused single-pass two-directional fill (pandas
-        # `_get_nearest_indexer` strict-< semantics live in
-        # asof_align_multi): one bucketed sort yields both directional
-        # fills — no pad + backfill pass, no grid-key join
-        vcols = value_cols or [c for c in sensor.columns if c != on]
-        aligned = asof_align_multi(
-            grid,
-            {prefix: sensor.select(on, *vcols)},
-            on,
-            method,
-            num_buckets=num_buckets,
-            bounds=bounds,
-        )
-        return _apply_tolerance(aligned, on, vcols, prefix, tolerance_ms)
-
-    if method not in ("pad", "backfill"):
+    if method not in ASOF_METHODS:
         raise ValueError(f"unknown as-of method: {method}")
-
     vcols = value_cols or [c for c in sensor.columns if c != on]
-    payload = F.struct(
-        F.col(on).alias("__matched_ts"), *[F.col(c) for c in vcols]
-    ).alias("__p")
-    s = sensor.select(F.col(on).alias("__t"), payload, F.lit(0).alias("__tag"))
-    payload_type = s.schema["__p"].dataType
-    g = grid.select(
-        F.col(on).alias("__t"),
-        F.lit(None).cast(payload_type).alias("__p"),
-        F.lit(1).alias("__tag"),
+    aligned = asof_align_multi(
+        grid,
+        {prefix: sensor.select(on, *vcols)},
+        on,
+        method,
+        num_buckets=num_buckets,
+        bounds=bounds,
     )
-    u = s.unionByName(g)
-
-    # Range-bucket the time axis. Bounds come from the caller when known
-    # (no job), else from one tiny agg job.
-    lo, hi = bounds if bounds is not None else u.agg(F.min("__t"), F.max("__t")).first()
-    if lo is None:
-        empty = [F.col(on)] + [
-            F.lit(None).cast(sensor.schema[c].dataType).alias(f"{prefix}{c}") for c in vcols
-        ] + [F.lit(None).cast("timestamp").alias(f"{prefix}__matched_ts")]
-        return grid.select(*empty).limit(0)
-    lo_us, hi_us = _us(lo), _us(hi)
-    bucket_us = max(1, (hi_us - lo_us) // num_buckets + 1)
-    u = u.withColumn("__b", _bucketize(F.col("__t"), lo_us, bucket_us, num_buckets))
-
-    spark = grid.sparkSession
-    spine = spark.range(num_buckets + 1).select(F.col("id").alias("__b"))
-
-    # The per-bucket edge aggregates read the WINDOW OUTPUT column __f,
-    # not the raw payload __p: at a sensor row (tag 0, non-null payload)
-    # the backward fill's frame ends at the current row, so
-    # last(__p, ignorenulls) there is the row's OWN payload — __f == __p
-    # for every row the edge agg consumes, and the selected row (the
-    # max_by/min_by key is unchanged) is identical, so the edge values
-    # are bit-identical to aggregating __p directly. The point of the
-    # indirection: referencing __f stops column pruning from dropping
-    # the window out of the edge branch, so BOTH consumers (fill +
-    # edges) plan the same Exchange(__b)+Sort+Window subtree and
-    # ReusedExchange computes the whole union prep ONCE instead of once
-    # per consumer (the r13 verdict's two-consumer duplication).
-    if method == "pad":
-        # In-bucket fill: at equal ts the sensor row (tag 0) sorts before
-        # the grid row, so an exact-timestamp observation is picked up.
-        w_fill = (
-            W.partitionBy("__b")
-            .orderBy(F.col("__t").asc(), F.col("__tag").asc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        edge_agg = F.max_by("__f", F.col("__t")).alias("__edge")
-        w_carry = W.orderBy("__b").rowsBetween(W.unboundedPreceding, -1)
-    else:  # backfill
-        # Forward fill expressed as a BACKWARD frame over DESCENDING
-        # time: Spark evaluates unbounded-PRECEDING frames incrementally
-        # (O(n) per partition) but recomputes unbounded-FOLLOWING frames
-        # from scratch per row (O(n^2) — a measured multi-minute
-        # straggler at 2M rows/bucket). In (t desc, tag asc) order the
-        # equal-ts sensor row (tag 0) sorts before the grid row, so
-        # last() looking back still sees the exact-timestamp match.
-        w_fill = (
-            W.partitionBy("__b")
-            .orderBy(F.col("__t").desc(), F.col("__tag").asc())
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        edge_agg = F.min_by("__f", F.col("__t")).alias("__edge")
-        w_carry = W.orderBy("__b").rowsBetween(1, W.unboundedFollowing)
-    fill = F.last("__p", ignorenulls=True)
-
-    # Two consumers (fill window + per-bucket edges) share the identical
-    # Exchange(__b)+Sort+Window subtree (the edge agg reads the window
-    # output, see above), so exchange reuse runs the prep once — no
-    # persist needed (see the measured A/B note in asof_align_multi).
-    wind = u.withColumn("__f", fill.over(w_fill))
-    per_bucket = wind.filter(F.col("__tag") == 0).groupBy("__b").agg(edge_agg)
-
-    # Cross-bucket carry: num_buckets rows -> single-partition window is
-    # trivially cheap; result is broadcast back onto the data.
-    carry_fn = F.last if method == "pad" else F.first
-    carry = (
-        spine.join(per_bucket, "__b", "left")
-        .withColumn("__carry", carry_fn("__edge", ignorenulls=True).over(w_carry))
-        .select("__b", "__carry")
-    )
-
-    aligned = (
-        wind.filter(F.col("__tag") == 1)
-        .join(F.broadcast(carry), "__b", "left")
-        .withColumn("__p2", F.coalesce("__f", "__carry"))
-    )
-    out_cols = [F.col("__t").alias(on)] + [
-        F.col(f"__p2.{c}").alias(f"{prefix}{c}") for c in vcols
-    ] + [F.col("__p2.__matched_ts").alias(f"{prefix}__matched_ts")]
-    return _apply_tolerance(
-        aligned.select(*out_cols), on, vcols, prefix, tolerance_ms
-    )
+    return _apply_tolerance(aligned, on, vcols, prefix, tolerance_ms)
 
 
 def _apply_tolerance(
@@ -300,7 +203,7 @@ def reduce_to_grid_cells(
     O(min(|sensor|, n_grid)), the big win when downsampling a high-rate
     sensor onto a coarse grid.
     """
-    if method not in ("pad", "backfill", "nearest", "interp"):
+    if method not in ASOF_METHODS:
         raise ValueError(f"unknown as-of method: {method}")
     delta = ts_us(F.col(on)) - F.lit(start_us)
     fdiv = (delta - ((delta % step_us) + step_us) % step_us) / step_us  # floor div
@@ -333,7 +236,6 @@ def asof_align_multi(
     method: str = "pad",
     num_buckets: int = DEFAULT_NUM_BUCKETS,
     bounds: tuple[dt.datetime, dt.datetime] | None = None,
-    persist_union: bool | None = None,
 ) -> DataFrame:
     """Align SEVERAL sensors onto one grid in a single union + window
     pass — for ALL methods, including ``nearest``.
@@ -360,7 +262,7 @@ def asof_align_multi(
     owns it, weight 0). ``{prefix}__matched_ts`` reports the NEARER
     surrounding observation (tie → later) for tolerance/diagnostics.
     """
-    if method not in ("pad", "backfill", "nearest", "interp"):
+    if method not in ASOF_METHODS:
         raise ValueError(f"unknown as-of method: {method}")
 
     prefixes = list(sensors)
@@ -407,28 +309,13 @@ def asof_align_multi(
     bucket_us = max(1, (hi_us - lo_us) // num_buckets + 1)
     u = u.withColumn("__b", _bucketize(F.col("__t"), lo_us, bucket_us, num_buckets))
 
-    # Both directions are expressed as BACKWARD (unbounded-PRECEDING)
-    # frames — Spark evaluates those incrementally, O(n) per partition,
-    # while unbounded-FOLLOWING frames recompute from scratch per row,
-    # O(n^2) (a measured multi-minute straggler at 2M rows/bucket). The
-    # forward fill therefore runs over DESCENDING time; the two sorts
-    # share one __b shuffle, Spark just re-sorts within partitions.
-    # Tie rules at equal t, encoded in the tag sort:
-    #   backward/pad (t asc, tag asc): sensor row (0) precedes the grid
-    #     row, so the backward frame OWNS exact-timestamp matches;
-    #   forward for nearest/interp (t desc, tag desc): grid row (1)
-    #     precedes the equal-ts sensor row, so the forward frame sees
-    #     only strictly-later observations (no double-count of exact
-    #     matches — distance 0 always wins the pad-vs-backfill race);
-    #   forward for pure backfill (t desc, tag asc): sensor row first,
-    #     so backfill alone DOES take the exact-timestamp match.
     # Window specs spelled as SQL OVER clauses: the fill/carry columns
     # are built as ONE parsed expression each instead of a Window +
     # Column object pair (the py4j chatter of constructing them was a
     # measurable slice of the flagship's query-build wall; plans and
     # values identical — ASC/DESC null ordering defaults match the
-    # Column API's asc()/desc()). Same frame semantics as before:
-    # backward (UNBOUNDED PRECEDING) frames only — Spark evaluates them
+    # Column API's asc()/desc()). Both directions use backward
+    # (UNBOUNDED PRECEDING) frames only — Spark evaluates them
     # incrementally, O(n) per partition, while unbounded-FOLLOWING
     # frames recompute per row, O(n^2); the forward fill therefore runs
     # over DESCENDING time and the two sorts share one __b shuffle.
@@ -498,23 +385,11 @@ def asof_align_multi(
                     + (over_bf_incl if method == "backfill" else over_bf_strict)
                 ).alias(f"__fb{j}")
             )
-    # The union stream has TWO consumers (the fill window and the
-    # per-bucket edge aggregation that feeds the carry table). Since the
-    # edge aggregates reference the window OUTPUT columns (see above),
-    # both consumers plan the identical Exchange(__b)+Sort+Window
-    # subtree and AQE's exchange reuse computes the whole prep (sensor
-    # scans, per-ts aggs, cell reduction, union) exactly ONCE — so the
-    # default is to NOT persist: materialization is a strictly worse way
-    # to get the same once-only property (r14 A/B on the 2M-row
-    # reduce_cells fixture: never-persist 3.34 s, size-gated 3.90 s,
-    # forced persist 4.05 s — and in r13, before the shared subtree,
-    # recompute-without-persist was 5.7 s). ``persist_union=True``
-    # remains as a caller override for plans where exchange reuse is
-    # known not to fire (e.g. consumers added OUTSIDE this function).
-    if persist_union is True:
-        from pyspark.storagelevel import StorageLevel
-
-        u = u.persist(StorageLevel.MEMORY_AND_DISK)
+    # The union is not persisted: both consumers (fill window + edge
+    # aggregation) plan the identical Exchange(__b)+Sort+Window subtree,
+    # so exchange reuse computes the prep once, and materializing it
+    # measured slower (2M-row reduce_cells fixture: never-persist
+    # 3.34 s, size-gated 3.90 s, forced persist 4.05 s).
     pcols = [F.col(f"__p{j}") for j in range(len(prefixes))]
     wind = u.select("__t", "__tag", "__b", *pcols, *fill_cols)
     per_bucket = wind.filter(F.col("__tag") == 0).groupBy("__b").agg(*edge_aggs)
@@ -619,7 +494,8 @@ def asof_join_keyed(
     bucket) so a hot key spreads across N sorts, and a per-key carry
     table (<= N rows per key — its window is bounded regardless of key
     volume) transports the last observation across bucket boundaries,
-    exactly the spine trick of :func:`asof_align` generalized per key.
+    exactly the spine trick of :func:`asof_align_multi` generalized per
+    key.
     Identical results (property-tested); one extra shuffled join on
     (key, bucket) is the price. ``bounds`` (known global (lo, hi) of
     the time axis) skips the bucketing bounds-discovery job.
@@ -680,7 +556,7 @@ def asof_join_keyed(
             .rowsBetween(W.unboundedPreceding, W.currentRow)
         )
     else:  # forward == backward over reversed time (O(n) frame, see
-        # asof_align's backfill note)
+        # asof_align_multi's frame note)
         w = (
             W.partitionBy(*fill_part)
             .orderBy(F.col("__t").desc(), F.col("__tag").asc(), F.col("__p").asc())
@@ -925,6 +801,8 @@ def synchronize(
     both measured, see :func:`_auto_reduce`). True/False force it for
     both sensors. The decision is recorded in the report.
     """
+    if method not in ASOF_METHODS:
+        raise ValueError(f"unknown as-of method: {method}")
     report: list[str] = []
     if camera is None or motion is None:
         return SyncResult(None, ["error: camera and motion data required"])

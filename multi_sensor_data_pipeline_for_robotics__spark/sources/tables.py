@@ -9,11 +9,11 @@ them to ``spark.sql``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from multi_sensor_data_pipeline_for_robotics__spark.cache import local_file_sizes
 
 TABLES = [
     "region",
@@ -185,24 +185,10 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
     estimate only costs a redundant (cheap, narrow) repartition.
     Returns None when the plan has no file scan or the files aren't
     locally stat-able."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
+    sizes = local_file_sizes(df)
+    if not sizes:
         return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(unquote(p.path))
-        except OSError:
-            return None
-    return total // (128 << 20) + 1
+    return sum(sizes) // (128 << 20) + 1
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -6,7 +6,6 @@ logical-plan probe. Each pins an equivalence an optimization could
 silently have broken."""
 
 import datetime as dt
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,7 +59,7 @@ def test_asof_edge_equal_timestamp_two_sensors(spark):
     assert [r["b_y"] for r in out] == [2.5] * 6
 
 
-def test_ngram_prefix_filter_equals_full_join(spark):
+def test_ngram_prefix_filter_equals_full_join(spark, monkeypatch):
     """The df-ordered prefix-filtered plan must produce the exact pair
     set of the full inverted-index join at every threshold — including
     empty docs, exact duplicates, and sub-threshold pairs."""
@@ -70,19 +69,18 @@ def test_ngram_prefix_filter_equals_full_join(spark):
              (103, ""), (104, None)]                                # empty
     df = spark.createDataFrame(docs, "doc_id long, text string")
     for thr in (0.3, 0.5, 0.9):
-        os.environ["SPARK_GRAFT_NGRAM_PREFIX"] = "0"
+        monkeypatch.setenv("SPARK_GRAFT_NGRAM_PREFIX", "0")
         full = sorted(
             map(tuple, D.ngram_jaccard_pairs(df, n=3, threshold=thr, max_shingle_df=None).collect())
         )
-        os.environ["SPARK_GRAFT_NGRAM_PREFIX"] = "1"
+        monkeypatch.setenv("SPARK_GRAFT_NGRAM_PREFIX", "1")
         pref = sorted(
             map(tuple, D.ngram_jaccard_pairs(df, n=3, threshold=thr, max_shingle_df=None).collect())
         )
-        os.environ.pop("SPARK_GRAFT_NGRAM_PREFIX", None)
         assert pref == full, f"threshold {thr}"
 
 
-def test_minhash_narrow_band_join_equals_wide(spark):
+def test_minhash_narrow_band_join_equals_wide(spark, monkeypatch):
     """The ids-only band join (narrow scale regime) must produce the
     identical pair set and est_jaccard values as the wide form,
     including the signature-identical star and the bucket cap path."""
@@ -91,14 +89,11 @@ def test_minhash_narrow_band_join_equals_wide(spark):
     docs += [(30, "alpha beta gamma delta epsilon eta")]  # near-dup of the clones
     df = spark.createDataFrame(docs, "doc_id long, text string")
     def run(flag, cap):
-        os.environ["SPARK_GRAFT_MINHASH_NARROW"] = flag
-        try:
-            return sorted(map(tuple, D.minhash_lsh_pairs(
-                df, num_hashes=16, bands=4, threshold=0.3, shingle_n=2,
-                max_bucket_size=cap,
-            ).collect()))
-        finally:
-            os.environ.pop("SPARK_GRAFT_MINHASH_NARROW", None)
+        monkeypatch.setenv("SPARK_GRAFT_MINHASH_NARROW", flag)
+        return sorted(map(tuple, D.minhash_lsh_pairs(
+            df, num_hashes=16, bands=4, threshold=0.3, shingle_n=2,
+            max_bucket_size=cap,
+        ).collect()))
     for cap in (0, 3):
         assert run("1", cap) == run("0", cap), f"cap {cap}"
 

@@ -208,28 +208,43 @@ def test_reduce_to_grid_cells_boundary_obs_survive(spark, method):
 
 @pytest.mark.parametrize("method", ["pad", "backfill", "nearest"])
 def test_asof_align_multi_three_sensors(spark, method):
-    """asof_align_multi with N>2 sensors must equal N independent
-    asof_align calls joined on the grid key."""
+    """asof_align_multi with N>2 sensors must match pandas
+    ``reindex(method=...)`` per sensor (an independent reference), and
+    equal N separate asof_align calls joined on the grid key (no sensor
+    leaks into another's columns)."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 1, 1)
+    offsets = {"a_": ([0, 150, 420], "x"), "b_": ([60, 230, 360, 500], "y"),
+               "c_": ([10, 490], "z")}
 
-    def _mk(offsets, col):
+    def _mk(ms_list, col):
         rows = [
-            (t0 + dt.timedelta(milliseconds=ms), float(ms)) for ms in offsets
+            (t0 + dt.timedelta(milliseconds=ms), float(ms)) for ms in ms_list
         ]
         return spark.createDataFrame(rows, f"timestamp timestamp, {col} double")
 
-    a = _mk([0, 150, 420], "x")
-    b = _mk([60, 230, 360, 500], "y")
-    c = _mk([10, 490], "z")
+    sensors = {prefix: _mk(*spec) for prefix, spec in offsets.items()}
     grid = S.time_grid(spark, t0, t0 + dt.timedelta(milliseconds=500), 100)
 
-    multi = S.asof_align_multi(
-        grid, {"a_": a, "b_": b, "c_": c}, method=method
-    ).toPandas()
+    multi = S.asof_align_multi(grid, sensors, method=method).toPandas()
+
+    multi_sorted = _sorted(multi)
+    gridx = pd.date_range(t0, t0 + dt.timedelta(milliseconds=500), freq="100ms")
+    assert list(multi_sorted["timestamp"]) == list(gridx)
+    for prefix, (ms, col) in offsets.items():
+        obs = pd.DatetimeIndex([t0 + dt.timedelta(milliseconds=m) for m in ms])
+        ref = pd.DataFrame({col: [float(m) for m in ms], "__matched_ts": obs},
+                           index=obs).reindex(gridx, method=method)
+        for c_ in (col, "__matched_ts"):
+            pd.testing.assert_series_equal(
+                multi_sorted[prefix + c_].reset_index(drop=True),
+                ref[c_].reset_index(drop=True),
+                check_names=False, check_dtype=False,
+            )
+
     single = None
-    for prefix, df in [("a_", a), ("b_", b), ("c_", c)]:
+    for prefix, df in sensors.items():
         al = S.asof_align(grid, df, method=method, prefix=prefix)
         single = al if single is None else single.join(al, "timestamp")
     single = single.toPandas()
@@ -237,6 +252,27 @@ def test_asof_align_multi_three_sensors(spark, method):
     pd.testing.assert_frame_equal(
         _sorted(multi)[cols], _sorted(single)[cols]
     )
+
+
+def test_bad_method_raises_before_any_spark_job(spark):
+    """An unknown as-of method is a ValueError raised before the first
+    Spark job — synchronize checks it ahead of its overlap-window job."""
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [(t0 + dt.timedelta(milliseconds=ms), float(ms)) for ms in (0, 50, 100)]
+    sensor = spark.createDataFrame(rows, "timestamp timestamp, x double")
+    grid = S.time_grid(spark, t0, t0 + dt.timedelta(milliseconds=100), 33)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match="unknown as-of method"):
+        S.synchronize(sensor, sensor, method="typo")
+    with pytest.raises(ValueError, match="unknown as-of method"):
+        S.asof_align(grid, sensor, method="typo")
+    with pytest.raises(ValueError, match="unknown as-of method"):
+        S.reduce_to_grid_cells(sensor, 0, 33_000, 4, method="typo")
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    # control: a job run on this thread does show up in the tracker
+    sensor.count()
+    assert set(tracker.getJobIdsForGroup(None)) - before
 
 
 # ---- keyed as-of join (pandas merge_asof(by=...) differential) ----
