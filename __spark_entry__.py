@@ -297,7 +297,7 @@ def _asof_query(method: str):
         grid = S.time_grid(spark, lo, hi, GRID_STEP_MS)
         # bounds already known from _grid_bounds — skips asof_align's
         # bounds-discovery job (same output by the bucket-clamp
-        # contract; r13 optimization, see OPTIMIZATION_r13.md)
+        # contract; r13 optimization, see git history)
         out = S.asof_align(grid, cam, method=method, bounds=(lo, hi))
         return out.select(
             "timestamp", "x", F.col("__matched_ts").alias("matched_ts")

@@ -149,8 +149,8 @@ def main() -> None:
         "dedup_incremental",
         "q_funnel",
         "graph_pagerank",
-        # ALL 16 r9 additions — regress against the committed
-        # bench_r9_extras.json baseline (VERDICT r9 item 6: per-family
+        # ALL 16 r9 additions — regress against the r9 extras baseline
+        # in git history (VERDICT r9 item 6: per-family
         # budgets must be mechanically visible, not archaeology)
         "select_lm_score",
         "select_dsir_weights",

@@ -117,6 +117,33 @@ def auto_bucket_cap(df: DataFrame, bytes_per_row: int = 512) -> int:
     return max(64, 8 * math.ceil(math.log2(est + 2)))
 
 
+def resolve_bucket_cap(
+    df: DataFrame, max_bucket_size: int | None, bytes_per_row: int = 512
+) -> int:
+    """A screen's ``max_bucket_size`` argument made concrete: ``None`` →
+    :func:`auto_bucket_cap`, a negative value → ValueError, anything
+    else as given (``0`` = uncapped)."""
+    if max_bucket_size is None:
+        return auto_bucket_cap(df, bytes_per_row=bytes_per_row)
+    if max_bucket_size < 0:
+        raise ValueError("max_bucket_size must be >= 0 (0 = uncapped)")
+    return max_bucket_size
+
+
+def auto_random_buckets(df: DataFrame, bytes_per_row: int = 512) -> int:
+    """Default ``random_buckets`` for the banding audits:
+    ``max(est_rows // 2, 16)``, so the audit's random within-bucket
+    self-join keeps O(1)-sized buckets at any corpus size. The row
+    estimate comes from file stats, falling back to an exact ``count()``
+    when the source isn't stat-able — an ``or 16`` fallback would give
+    n/16-sized buckets and a quadratic join on in-memory sources, the
+    blow-up the auto-sizing exists to prevent."""
+    est_n = estimated_source_rows(df, bytes_per_row=bytes_per_row)
+    if not est_n:
+        est_n = df.count()
+    return max(est_n // 2, 16)
+
+
 def persist_gate_bytes() -> int:
     """The size gate, honoring the SPARK_GRAFT_PERSIST_MIN_BYTES
     override."""

@@ -30,12 +30,23 @@ from pyspark.sql import functions as F
 import os
 
 from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-    auto_bucket_cap,
+    auto_random_buckets,
     estimated_source_bytes,
     maybe_persist,
+    resolve_bucket_cap,
 )
 from multi_sensor_data_pipeline_for_robotics__spark.functions.text import tokens
 from multi_sensor_data_pipeline_for_robotics__spark.sources.tables import ensure_parallelism
+
+
+def _check_bands(num_hashes: int, bands: int) -> None:
+    if bands < 1 or num_hashes % bands:
+        raise ValueError("num_hashes must be divisible by bands")
+
+
+def _check_threshold(threshold: float) -> None:
+    if not 0 <= threshold <= 1:
+        raise ValueError(f"threshold must be in [0, 1], got {threshold!r}")
 
 
 def dedup_exact(
@@ -224,6 +235,7 @@ def ngram_jaccard_pairs(
     the representative is preserved (components unchanged); run it
     when the corpus has NOT already been through ``dedup_exact``.
     """
+    _check_threshold(threshold)
     star = None
     if collapse_identical:
         df, star = _collapse_exact_texts(df, text_col, id_col)
@@ -526,37 +538,17 @@ def minhash_lsh_pairs(
     Jaccard filters candidates; exact verification can follow with
     ``ngram_jaccard_pairs`` semantics on the candidate set.
 
-    Scale guards against the O(c²)-pairs-per-cluster blowup that
-    boilerplate-heavy web corpora hit after exact dedup (a c-member
-    templated-page cluster lands whole in one bucket of EVERY band):
-
-    * **Signature-identical collapse (always on).** Documents sharing
-      the entire signature are collapsed to their min-id representative
-      before the band join; each member is emitted directly as a
-      ``(rep, member, est_jaccard=1.0)`` star edge — exactly the score
-      the join would have computed (all ``num_hashes`` slots match) —
-      and only representatives enter the banding. Cost per
-      signature-identical cluster: c-1 edges instead of c(c-1)/2, and
-      member pairs never reach the join. Connectivity through the
-      representative is preserved, so downstream connected components
-      are unchanged; only the redundant clique expansion (derivable
-      from the star) is dropped.
-    * **``max_bucket_size`` (DEFAULT ON, auto-sized).** Any (band,
-      bucket) group of representatives larger than this emits doc →
-      bucket-min star edges (est scored from the signatures as usual,
-      threshold still applies) instead of joining all pairs, bounding
-      the worst bucket at c-1 edges. ``None`` auto-sizes via
-      ``cache.auto_bucket_cap`` (``max(64, 8·ceil(log2(est_rows)))``
-      from the file-stat row estimate) so a factory-default call gets
-      the hot-cluster protection; pass ``0`` to opt out (full cliques).
-      Dropped-pair accounting is surfaced by
-      ``dedup_audit(..., max_bucket_size=...)``.
+    Scale guards (signature-identical collapse, always on; the
+    ``max_bucket_size`` bucket cap, default on, ``0`` opts out): see
+    :func:`_banded_candidates`. The collapse is exact here: members
+    reach the output as ``(rep, member, est_jaccard=1.0)`` star edges,
+    the score the join would compute, because est is a function of
+    the two signatures. Dropped-pair accounting is surfaced by
+    ``dedup_audit(..., max_bucket_size=...)``.
     """
-    assert num_hashes % bands == 0
-    if max_bucket_size is None:
-        max_bucket_size = auto_bucket_cap(df)
-    elif max_bucket_size < 0:
-        raise ValueError("max_bucket_size must be >= 0 (0 = uncapped)")
+    _check_bands(num_hashes, bands)
+    _check_threshold(threshold)
+    max_bucket_size = resolve_bucket_cap(df, max_bucket_size)
     r = num_hashes // bands
     # the banded self-join consumes the signatures twice; size-gated
     # persist of the 1-row-per-doc signature table (shingle UDF +
@@ -609,6 +601,7 @@ def minhash_lsh_pairs(
     banded = reps.select(
         "doc", "signature", F.expr(f"explode(array({bb}))").alias("bb")
     ).select("doc", "signature", "bb.band", "bb.bucket")
+    keep = F.col("est_jaccard") >= threshold
     if _narrow_band_auto(df):
         # NARROW banding shuffle for the scale regime (guide §2.3
         # "shuffle keys and metadata instead of payloads"): the banding
@@ -621,71 +614,28 @@ def minhash_lsh_pairs(
         # (dropDuplicates keeps one of several equal-est copies either
         # way). Off below the gate: at bench scale the two extra
         # attach joins cost more than the payload the shuffle saves.
-        bn = banded.select("doc", "band", "bucket")
-        ids = None
-        if max_bucket_size:
-            wb = Window.partitionBy("band", "bucket")
-            sized = bn.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
-                "__mdoc", F.min("doc").over(wb)
-            )
-            bucket_star_ids = sized.filter(
-                (F.col("__n") > max_bucket_size) & (F.col("doc") != F.col("__mdoc"))
-            ).select(
-                F.col("__mdoc").alias("doc_a"), F.col("doc").alias("doc_b")
-            )
-            bn = sized.filter(F.col("__n") <= max_bucket_size).drop("__n", "__mdoc")
-            ids = bucket_star_ids
-        a, b = bn.alias("a"), bn.alias("b")
-        cand_ids = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        ).select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        ids = cand_ids if ids is None else cand_ids.unionByName(ids)
+        ids, _ = _banded_candidates(
+            banded.select("doc", "band", "bucket"), None, max_bucket_size
+        )
         sa = sig.select(F.col("doc").alias("doc_a"), F.col("signature").alias("__sa"))
         sb = sig.select(F.col("doc").alias("doc_b"), F.col("signature").alias("__sb"))
         cand = (
-            ids.distinct()
-            .join(sa, "doc_a")
+            ids.join(sa, "doc_a")
             .join(sb, "doc_b")
             .select("doc_a", "doc_b", est("__sa", "__sb").alias("est_jaccard"))
         )
+        out = cand.unionByName(star).filter(keep).dropDuplicates(["doc_a", "doc_b"])
     else:
-        if max_bucket_size:
-            # the cap window partitions on the band-join key, so its
-            # exchange+sort IS the join's required distribution — plan
-            # cost of the default-on guard is the window evaluation only
-            wb = Window.partitionBy("band", "bucket")
-            sized = banded.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
-                "__m", F.min(F.struct("doc", "signature")).over(wb)
-            )
-            bucket_star = sized.filter(
-                (F.col("__n") > max_bucket_size) & (F.col("doc") != F.col("__m.doc"))
-            ).select(
-                F.col("__m.doc").alias("doc_a"),
-                F.col("doc").alias("doc_b"),
-                est("__m.signature", "signature").alias("est_jaccard"),
-            )
-            banded = sized.filter(F.col("__n") <= max_bucket_size).drop("__n", "__m")
-            star = star.unionByName(bucket_star)
-        a, b = banded.alias("a"), banded.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        ).select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            est("a.signature", "b.signature").alias("est_jaccard"),
+        out, _ = _banded_candidates(
+            banded,
+            star,
+            max_bucket_size,
+            score=lambda pa, pb: est(f"{pa}signature", f"{pb}signature").alias(
+                "est_jaccard"
+            ),
+            keep=keep,
         )
-    return (
-        cand.unionByName(star)
-        .filter(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["doc_a", "doc_b"])
-        .select("doc_a", "doc_b", "est_jaccard")
-    )
+    return out.select("doc_a", "doc_b", "est_jaccard")
 
 
 MINHASH_PRIME = 2147483629  # largest prime below 2^31
@@ -749,6 +699,17 @@ def _banded_portable(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     ).select("doc", *[f"h{i}" for i in range(num_hashes)], "bb.band", "bb.bucket")
 
 
+def _portable_est(pa: str, pb: str, num_hashes: int):
+    """Estimated Jaccard of two portable signatures, the columns
+    ``h0..h{N-1}`` under prefixes ``pa`` / ``pb``: the matching-slot
+    fraction, an exact multiple of 1/num_hashes."""
+    matches = sum(
+        F.when(F.col(f"{pa}h{i}") == F.col(f"{pb}h{i}"), 1).otherwise(0)
+        for i in range(num_hashes)
+    )
+    return matches.cast("double") / num_hashes
+
+
 def minhash_lsh_pairs_portable(
     df: DataFrame,
     num_hashes: int = 16,
@@ -773,23 +734,16 @@ def minhash_lsh_pairs_portable(
 
     Slower than :func:`minhash_lsh_pairs` (sha256 + Catalyst shingle
     expressions); use for verification, the xxhash64 path for scale.
-    Shares :func:`minhash_lsh_pairs`' scale guards: signature-identical
-    collapse (always on — members of a signature-identical cluster are
-    emitted as min-id-representative star edges with ``est_jaccard``
-    1.0, the exact score the join would compute) and the DEFAULT-ON
-    ``max_bucket_size`` star-reduction of oversized band buckets
-    (``None`` → ``cache.auto_bucket_cap``; ``0`` opts out).
+    Scale guards and their soundness: as :func:`minhash_lsh_pairs`.
     """
-    assert num_hashes % bands == 0
-    if max_bucket_size is None:
-        max_bucket_size = auto_bucket_cap(df)
-    elif max_bucket_size < 0:
-        raise ValueError("max_bucket_size must be >= 0 (0 = uncapped)")
+    _check_bands(num_hashes, bands)
+    _check_threshold(threshold)
+    max_bucket_size = resolve_bucket_cap(df, max_bucket_size)
     # size-gated persist, same two-consumer reason as minhash_lsh_pairs
     sig = maybe_persist(
         minhash_signatures_portable(df, num_hashes, text_col, id_col, shingle_n)
     )
-    cand = _portable_candidates(sig, num_hashes, bands, max_bucket_size)
+    cand, _ = _portable_candidates(sig, num_hashes, bands, max_bucket_size)
     return cand.filter(F.col("est_jaccard") >= threshold)
 
 
@@ -881,68 +835,37 @@ def _sig_rep_portable(sig: DataFrame, num_hashes: int) -> DataFrame:
     )
 
 
-def _portable_candidates(
-    sig: DataFrame,
-    num_hashes: int,
-    bands: int,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Candidate pairs with estimated Jaccard from a portable signature
-    table: ``(doc_a, doc_b, est_jaccard)``, one row per distinct pair —
-    the shared candidate-generation stage of
-    :func:`minhash_lsh_pairs_portable` and :func:`dedup_audit` (kept
-    in one place so the audit can never drift from the screen it
-    audits, the ``_portable_banded_vecs`` discipline).
+def _portable_sig_fn(hash_family: str):
+    """The portable MinHash signature builder for ``hash_family``."""
+    if hash_family == "sha256":
+        return minhash_signatures_portable
+    if hash_family == "tokenfold":
+        return minhash_signatures_tokenfold
+    raise ValueError(f"unknown hash_family: {hash_family!r}")
 
-    Emits the union of (a) signature-identical star edges
-    ``(rep, member, 1.0)``, (b) bucket-min star edges for band buckets
-    over ``max_bucket_size`` (``0``/``None`` here = uncapped — PUBLIC
-    callers resolve the auto default before calling), and (c) the band
-    self-join over representatives in small-enough buckets. See
-    :func:`minhash_lsh_pairs` for the scale rationale."""
+
+def _portable_candidates(
+    sig: DataFrame, num_hashes: int, bands: int, max_bucket_size: int
+) -> tuple[DataFrame, DataFrame | None]:
+    """``(pairs, dropped)`` of :func:`_banded_candidates` over a portable
+    signature table: ``(doc_a, doc_b, est_jaccard)`` pairs, signature-
+    identical members included as ``(rep, member, 1.0)`` star edges.
+    Shared by :func:`minhash_lsh_pairs_portable` and :func:`dedup_audit`
+    so the audit can never drift from the screen it audits;
+    ``max_bucket_size`` arrives resolved (``0`` = uncapped)."""
     sigr = _sig_rep_portable(sig, num_hashes)
-    hcols = [f"h{i}" for i in range(num_hashes)]
     star = sigr.filter(F.col("doc") != F.col("__rep")).select(
         F.col("__rep").alias("doc_a"),
         F.col("doc").alias("doc_b"),
         F.lit(1.0).alias("est_jaccard"),
     )
     reps = sigr.filter(F.col("doc") == F.col("__rep")).drop("__rep")
-    banded = _banded_portable(reps, num_hashes, bands)
-    if max_bucket_size:
-        wb = Window.partitionBy("band", "bucket")
-        sized = banded.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
-            "__m", F.min(F.struct("doc", *hcols)).over(wb)
-        )
-        m_matches = sum(
-            F.when(F.col(f"__m.h{i}") == F.col(f"h{i}"), 1).otherwise(0)
-            for i in range(num_hashes)
-        )
-        bucket_star = sized.filter(
-            (F.col("__n") > max_bucket_size) & (F.col("doc") != F.col("__m.doc"))
-        ).select(
-            F.col("__m.doc").alias("doc_a"),
-            F.col("doc").alias("doc_b"),
-            (m_matches.cast("double") / num_hashes).alias("est_jaccard"),
-        )
-        banded = sized.filter(F.col("__n") <= max_bucket_size).drop("__n", "__m")
-        star = star.unionByName(bucket_star)
-    a, b = banded.alias("a"), banded.alias("b")
-    matches = sum(
-        F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
+    return _banded_candidates(
+        _banded_portable(reps, num_hashes, bands),
+        star,
+        max_bucket_size,
+        score=lambda pa, pb: _portable_est(pa, pb, num_hashes).alias("est_jaccard"),
     )
-    cand = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.doc") < F.col("b.doc")),
-    ).select(
-        F.col("a.doc").alias("doc_a"),
-        F.col("b.doc").alias("doc_b"),
-        (matches.cast("double") / num_hashes).alias("est_jaccard"),
-    )
-    return cand.unionByName(star).dropDuplicates(["doc_a", "doc_b"])
 
 
 def dedup_against_corpus(
@@ -982,13 +905,9 @@ def dedup_against_corpus(
     docs both survive if neither matches the corpus) — run one of the
     pair operators on the batch first if that matters.
     """
-    assert num_hashes % bands == 0
-    if hash_family == "sha256":
-        sig_fn = minhash_signatures_portable
-    elif hash_family == "tokenfold":
-        sig_fn = minhash_signatures_tokenfold
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    _check_bands(num_hashes, bands)
+    _check_threshold(threshold)
+    sig_fn = _portable_sig_fn(hash_family)
     if corpus_signatures is None:
         if corpus is None:
             raise ValueError("pass either corpus or corpus_signatures")
@@ -1009,10 +928,6 @@ def dedup_against_corpus(
     )
     nb = _banded_portable(nsig, num_hashes, bands).alias("a")
     cb = _banded_portable(corpus_distinct, num_hashes, bands).alias("b")
-    matches = sum(
-        F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
     matched = (
         nb.join(
             cb,
@@ -1021,7 +936,7 @@ def dedup_against_corpus(
         )
         .select(
             F.col("a.doc").alias("doc"),
-            (matches.cast("double") / num_hashes).alias("est_jaccard"),
+            _portable_est("a.", "b.", num_hashes).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= threshold)
         .select("doc")
@@ -1367,12 +1282,7 @@ def simhash_pairs(
     so block width grows — a fixed block width eventually sends the
     block join quadratic exactly like a fixed LSH band width.
 
-    Signature-identical collapse (always on, the
-    :func:`minhash_lsh_pairs` discipline): docs sharing the entire
-    64-bit signature — distance 0, colliding in EVERY block — collapse
-    to their min-id representative before the block join and emit
-    ``(rep, member, hamming=0)`` star edges, bounding a c-member
-    signature-identical cluster at c-1 edges instead of c(c-1)/2.
+    Signature-identical collapse: see :func:`hamming_pairs`.
     """
     # size-gated persist, same two-consumer reason as minhash_lsh_pairs:
     # the block self-join reads the (doc, sig) table twice
@@ -1380,6 +1290,106 @@ def simhash_pairs(
     return hamming_pairs(
         maybe_persist(sig), max_hamming=max_hamming, width=sigwidth
     )
+
+
+def _banded_candidates(
+    banded: DataFrame,
+    star: DataFrame | None,
+    cap: int,
+    score=None,
+    keep=None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """The candidate stage every banded screen shares — MinHash (fast,
+    narrow and portable), sign-LSH (fast and portable), the Hamming
+    blocks of :func:`hamming_pairs`, and the two banding audits: cap
+    oversized buckets → band self-join → union with the star edges →
+    one row per pair.
+
+    ``banded`` has one ``(id, band, bucket, *carry)`` row per signature
+    representative and band; its FIRST column is the id, and pairs come
+    out as ``<id>_a < <id>_b``. ``star`` is the screen's collapse star,
+    already in the output's columns (or None). ``cap`` is a resolved
+    ``max_bucket_size`` (``0`` = uncapped). ``score(pa, pb)`` builds the
+    pair's aliased score Column from carried columns under two prefixes
+    (``"a."``/``"b."`` on join pairs, ``"__m."``/``""`` on bucket-star
+    edges, ``__m`` being the bucket's min ``(id, *carry)`` struct);
+    without it pairs carry ids only and the screen re-attaches its
+    payload by id afterwards. ``keep`` filters pairs BEFORE the dedup.
+    Returns ``(pairs, dropped)``; ``dropped`` (None when uncapped) is a
+    lazy one-row ``n_pairs`` frame: the within-bucket pairs the cap did
+    not emit, Σ c(c-1)/2 - (c-1) over oversized (band, bucket) groups,
+    pre-dedup across bands — the audits' ``bucket_star_dropped`` row.
+
+    Why the two scale guards: a c-member cluster of near-identical
+    items lands whole in one bucket of EVERY band (wide bands only fix
+    unrelated-item saturation), and the within-bucket clique join
+    emits c(c-1)/2 pairs for it — the boilerplate shape of web corpora.
+
+    * **Collapse (caller side, always on).** Items with the same
+      collapse key go to their min-id representative before banding,
+      and members reach the output as ``(rep, member)`` star edges:
+      c-1 edges instead of c(c-1)/2, and members never enter the join.
+      Connectivity through the representative is preserved, so
+      downstream connected components are unchanged; only the clique
+      expansion, derivable from the star, is dropped. Sound only when
+      the verifying score is a function of the collapse key — each
+      screen states its key.
+    * **Bucket cap (``max_bucket_size``, default on).** A (band, bucket)
+      group of more than ``cap`` representatives emits member →
+      bucket-min star edges (scored like any pair) instead of its
+      clique, bounding the worst bucket at c-1 edges. ``None`` at the
+      screens auto-sizes through ``cache.resolve_bucket_cap``; ``0``
+      opts out. It is an explicit recall trade: a star edge that fails
+      verification drops connectivity the clique would have kept. The
+      cap window partitions on the join key, so its exchange + sort IS
+      the join's required distribution: the guard costs only the window
+      evaluation.
+    """
+    idc = banded.columns[0]
+    carry = [c for c in banded.columns if c not in (idc, "band", "bucket")]
+    a_col, b_col = f"{idc}_a", f"{idc}_b"
+
+    def pair(pa: str, pb: str, a_id: str, b_id: str) -> list:
+        cols = [F.col(a_id).alias(a_col), F.col(b_id).alias(b_col)]
+        return cols if score is None else cols + [score(pa, pb)]
+
+    edges = [] if star is None else [star]
+    dropped = None
+    if cap:
+        wb = Window.partitionBy("band", "bucket")
+        m_id = f"__m.{idc}" if carry else "__m"
+        sized = banded.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
+            "__m", F.min(F.struct(idc, *carry) if carry else idc).over(wb)
+        )
+        edges.append(
+            sized.filter((F.col("__n") > cap) & (F.col(idc) != F.col(m_id))).select(
+                *pair("__m.", "", m_id, idc)
+            )
+        )
+        c = F.col("c")
+        dropped = (
+            banded.groupBy("band", "bucket")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .filter(c > cap)
+            .agg(
+                F.coalesce(
+                    F.sum(c * (c - 1) / 2 - (c - 1)).cast("long"), F.lit(0)
+                ).alias("n_pairs")
+            )
+        )
+        banded = sized.filter(F.col("__n") <= cap).drop("__n", "__m")
+    a, b = banded.alias("a"), banded.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col(f"a.{idc}") < F.col(f"b.{idc}")),
+    ).select(*pair("a.", "b.", f"a.{idc}", f"b.{idc}"))
+    for e in edges:
+        pairs = pairs.unionByName(e)
+    if keep is not None:
+        pairs = pairs.filter(keep)
+    return pairs.dropDuplicates([a_col, b_col]), dropped
 
 
 def hamming_pairs(
@@ -1395,14 +1405,14 @@ def hamming_pairs(
     and ``operators.multimodal.phash_neardup`` (image average-hash):
     any pair within distance k matches exactly on >= 1 of the k+1
     signature blocks, so candidates come from one equi-join per block
-    and the exact ``bit_count(xor)`` filter runs only on candidates.
+    (:func:`_banded_candidates`, uncapped) and the exact
+    ``bit_count(xor)`` filter runs only on candidates.
 
     Signature-identical collapse (always on, sound here because
     Hamming distance IS a pure function of the two signatures —
     identical sigs are distance 0 from each other and equidistant from
-    everything else): identical-signature docs collapse to min-id star
-    edges ``(rep, member, 0)`` and only representatives enter the
-    block join. Output: ``(doc_a, doc_b, hamming)``.
+    everything else): members reach the output as ``(rep, member, 0)``
+    star edges. Output: ``(doc_a, doc_b, hamming)``.
 
     When ``width`` doesn't divide evenly, the ``width mod (k+1)`` top
     bits are not banded — recall is still guaranteed (differing bits
@@ -1429,39 +1439,25 @@ def hamming_pairs(
             F.array(
                 *[
                     F.struct(
-                        F.lit(bi).alias("block"),
+                        F.lit(bi).alias("band"),
                         F.shiftright(F.col("sig"), bi * bwidth)
                         .bitwiseAND(F.lit((1 << bwidth) - 1))
-                        .alias("key"),
+                        .alias("bucket"),
                     )
                     for bi in range(nblocks)
                 ]
             )
         ).alias("bb"),
-    ).select("doc", "sig", "bb.block", "bb.key")
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    ).select("doc", "sig", "bb.band", "bb.bucket")
+    pairs, _ = _banded_candidates(
+        blocks,
+        star,
+        0,
+        score=lambda pa, pb: F.bit_count(
+            F.col(f"{pa}sig").bitwiseXOR(F.col(f"{pb}sig"))
+        ).alias("hamming"),
     )
-    dist = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    return (
-        cand.withColumn("hamming", dist)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-        .unionByName(star)
-    )
+    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def ngram_contamination(
@@ -2156,13 +2152,11 @@ def dedup_audit(
       random_buckets`` and pair all-vs-all within a bucket, minus any
       pair that also band-collides.  Bucket sizes are
       Poisson(n/``random_buckets``); ``random_buckets=None`` auto-sizes
-      to ``max(est_rows // 2, 16)`` from a file-stat row estimate —
-      falling back to an exact ``count()`` when the source isn't
-      stat-able (in-memory frames, non-local schemes) — so buckets stay
-      tiny and fully parallel at ANY corpus size (a fixed count at
-      large n gives n/count-sized buckets and a quadratic within-bucket
-      join — the blow-up class SCALE.md measured for 8-bit band
-      buckets).  Every true near-dup found here is a
+      through ``cache.auto_random_buckets`` so buckets stay tiny and
+      fully parallel at ANY corpus size (a fixed count at large n gives
+      n/count-sized buckets and a quadratic within-bucket join — the
+      blow-up class SCALE.md measured for 8-bit band buckets).  Every
+      true near-dup found here is a
       BANDING false negative (est_jaccard may agree, the screen just
       never looked).
 
@@ -2172,14 +2166,11 @@ def dedup_audit(
     fp = drops it refutes, fn = true near-dups the screen kept.
     Precision/recall are per-stratum (``try_divide`` null when a
     stratum has no positives).  ``max_bucket_size`` mirrors the
-    screen's oversized-bucket star-reduction, which is DEFAULT ON
-    (``None`` → the same ``cache.auto_bucket_cap`` the screen
-    resolves; ``0`` audits the uncapped form): whenever the cap is
-    active, a third accounting row ``bucket_star_dropped`` reports in
-    ``n_pairs`` the number of within-bucket pairs the star-reduction
-    did NOT emit (sum over oversized (band, bucket) groups of
-    c(c-1)/2 - (c-1), pre-dedup across bands; metric columns are null
-    — these pairs were never scored, that is the point of the guard).
+    screen's bucket cap (the screen's default; ``0`` audits the
+    uncapped form): while the cap is active, a third row
+    ``bucket_star_dropped`` reports in ``n_pairs`` the pairs the cap
+    did NOT emit (see :func:`_banded_candidates`; metric columns are
+    null — these pairs were never scored).
 
     Scale shape: the collision stratum is the LSH band self-join the
     screen itself runs; the random stratum is a bounded within-bucket
@@ -2187,47 +2178,24 @@ def dedup_audit(
     two shingle joins (pairs x shingles, sample-bounded).  Everything
     uses the portable sha256 Carter-Wegman family, so the whole audit
     is replayable in any engine."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    _check_bands(num_hashes, bands)
     if collision_sample_mod < 1 or (
         random_buckets is not None and random_buckets < 1
     ):
         raise ValueError(
             "collision_sample_mod and random_buckets must be >= 1"
         )
+    max_bucket_size = resolve_bucket_cap(df, max_bucket_size)
+    sig_fn = _portable_sig_fn(hash_family)
     if random_buckets is None:
-        from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-            estimated_source_rows,
-        )
-
-        # file-stat estimate when available; otherwise an exact count()
-        # — an `or 16` fallback here would give n/16-sized buckets and a
-        # quadratic within-bucket join on in-memory / non-stat-able
-        # sources, exactly the blow-up class the auto-sizing prevents
-        # (one extra scan is cheap next to the audit's shingle joins)
-        est_n = estimated_source_rows(df, bytes_per_row=512)
-        if not est_n:
-            est_n = df.count()
-        random_buckets = max(est_n // 2, 16)
-    if max_bucket_size is None:
-        max_bucket_size = auto_bucket_cap(df)
-    elif max_bucket_size < 0:
-        raise ValueError("max_bucket_size must be >= 0 (0 = uncapped)")
-    if hash_family == "sha256":
-        sig_fn = minhash_signatures_portable
-    elif hash_family == "tokenfold":
-        sig_fn = minhash_signatures_tokenfold
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+        random_buckets = auto_random_buckets(df)
     sig = maybe_persist(
         sig_fn(df, num_hashes, text_col, id_col, shingle_n)
     )
     # the screen's own candidate stage, shared verbatim (see
     # _portable_candidates) — the audit measures THE shipped screen
-    cand = maybe_persist(
-        _portable_candidates(sig, num_hashes, bands, max_bucket_size),
-        min_bytes=0,
-    )
+    cand, dropped = _portable_candidates(sig, num_hashes, bands, max_bucket_size)
+    cand = maybe_persist(cand, min_bytes=0)
 
     def _h7(col):
         return F.conv(F.substring(F.sha2(col, 256), 1, 7), 16, 10).cast(
@@ -2351,33 +2319,18 @@ def dedup_audit(
             ),
         )
     )
-    if max_bucket_size:
-        # dropped-pair accounting for the star-reduction: per oversized
-        # (band, bucket) group of c representatives, the join would have
-        # emitted c(c-1)/2 pairs and the star emits c-1 — surface the
-        # difference so a user can see what the guard declined to score
-        c = F.col("c")
-        dropped = (
-            _banded_portable(reps.drop("__rep"), num_hashes, bands)
-            .groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(c > max_bucket_size)
-            .agg(
-                F.coalesce(
-                    F.sum(c * (c - 1) / 2 - (c - 1)).cast("long"), F.lit(0)
-                ).alias("n_pairs")
-            )
-            .select(
+    if dropped is not None:
+        # what the bucket cap declined to score (see _banded_candidates)
+        out = out.unionByName(
+            dropped.select(
                 F.lit("bucket_star_dropped").alias("stratum"),
                 F.col("n_pairs"),
-                F.lit(None).cast("long").alias("n_screen_drop"),
-                F.lit(None).cast("long").alias("tp"),
-                F.lit(None).cast("long").alias("fp"),
-                F.lit(None).cast("long").alias("fn"),
-                F.lit(None).cast("long").alias("tn"),
+                *[
+                    F.lit(None).cast("long").alias(k)
+                    for k in ("n_screen_drop", "tp", "fp", "fn", "tn")
+                ],
                 F.lit(None).cast("double").alias("precision"),
                 F.lit(None).cast("double").alias("recall"),
             )
         )
-        out = out.unionByName(dropped)
     return out

@@ -23,13 +23,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from multi_sensor_data_pipeline_for_robotics__spark.cache import maybe_persist
+from multi_sensor_data_pipeline_for_robotics__spark.cache import (
+    auto_random_buckets,
+    estimated_source_rows,
+    maybe_persist,
+    resolve_bucket_cap,
+)
 from multi_sensor_data_pipeline_for_robotics__spark.functions.vector import (
     cosine,
     cosine_batch,
     dot,
     l2_norm,
     to_double,
+)
+from multi_sensor_data_pipeline_for_robotics__spark.operators.dedup import (
+    _banded_candidates,
 )
 from multi_sensor_data_pipeline_for_robotics__spark.sources.tables import ensure_parallelism
 
@@ -158,40 +166,20 @@ def lsh_neardup_pairs(
     or pass narrow bands explicitly on corpora small enough to afford
     the candidate volume.
 
-    Scale guards against O(c²) candidates per TRUE near-dup cluster
-    (wide bands only fix unrelated-vector saturation — a c-member
-    cluster of near-identical vectors still lands whole in one bucket
-    of every band):
-
-    * **Byte-identical collapse (always on).** Vectors that are
-      BYTE-IDENTICAL collapse to their min-id representative before the
-      projections (members skip the hyperplane UDF entirely); member
-      edges (rep, member) go straight to the exact-cosine verifier.
-      Components are provably unchanged: cosine is a function of the
-      float values, so ``cosine(member, x) == cosine(rep, x)``
-      bit-for-bit for every external x — any member–external edge the
-      clique form would keep is mirrored by the kept rep–external edge
-      — and (rep, member) scores exactly 1.0 ≥ threshold, so members
-      stay connected through their representative. (Collapsing on
-      bucket-array identity — the r12 form — was NOT sound here:
-      unlike MinHash, the verification score is not a function of the
-      buckets, so a member whose only passing edge was member–external
-      could lose it when the rep's cosine fell below threshold.)
-    * **``max_bucket_size`` (DEFAULT ON, auto-sized).** Band buckets of
-      representatives larger than this emit doc → bucket-min star
-      edges into the verifier instead of the within-bucket clique —
-      the guard that bounds near-identical-but-not-byte-identical
-      clusters, an EXPLICIT recall trade (star edges that fail the
-      rep's cosine drop member connectivity the clique would have
-      kept). ``None`` auto-sizes via ``cache.auto_bucket_cap``; ``0``
-      opts out. Dropped-pair accounting:
-      ``lsh_banding_audit(..., max_bucket_size=...)``.
+    Scale guards (byte-identical collapse, always on; the
+    ``max_bucket_size`` bucket cap, default on, ``0`` opts out): see
+    ``operators.dedup._banded_candidates``. The collapse key here is
+    the BYTE-IDENTICAL vector, never the bucket array: cosine is a
+    function of the float values, so ``cosine(member, x) ==
+    cosine(rep, x)`` bit-for-bit for every external x and (rep, member)
+    scores exactly 1.0 ≥ threshold — components are provably
+    unchanged. (Collapsing on bucket-array identity — the r12 form —
+    was NOT sound: unlike MinHash, the verification score is not a
+    function of the buckets, so a member whose only passing edge was
+    member–external could lose it when the rep's cosine fell below
+    threshold.) Dropped-pair accounting:
+    ``lsh_banding_audit(..., max_bucket_size=...)``.
     """
-    from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-        auto_bucket_cap,
-        estimated_source_rows,
-    )
-
     if band_bits is None:
         import math
 
@@ -200,10 +188,7 @@ def lsh_neardup_pairs(
         # over-count 64-dim float rows ~8x and overshoot the width)
         est = estimated_source_rows(embeddings, bytes_per_row=4 * dim + 16) or 0
         band_bits = min(max(math.ceil(math.log2(max(est, 2))) + 1, 8), 24)
-    if max_bucket_size is None:
-        max_bucket_size = auto_bucket_cap(embeddings, bytes_per_row=4 * dim + 16)
-    elif max_bucket_size < 0:
-        raise ValueError("max_bucket_size must be >= 0 (0 = uncapped)")
+    max_bucket_size = resolve_bucket_cap(embeddings, max_bucket_size, 4 * dim + 16)
     planes = _hyperplanes(dim, bands * band_bits, seed)
     buckets = _band_buckets_udf(planes, bands, band_bits)
     # Candidate generation moves only (id, band, bucket) triples — the
@@ -221,45 +206,24 @@ def lsh_neardup_pairs(
     # ensure_parallelism exchange was a pure extra stage (one job +
     # one shuffle of the raw vectors) with nothing expensive under it.
     sigr = embeddings.select(
-        F.col(id_col).alias("doc"), F.col(vec_col).alias("__v")
+        F.col(id_col).alias("id"), F.col(vec_col).alias("__v")
     ).withColumn(
         "__rep",
-        F.min("doc").over(W.partitionBy(F.xxhash64("__v"), "__v")),
+        F.min("id").over(W.partitionBy(F.xxhash64("__v"), "__v")),
     )
-    star = sigr.filter(F.col("doc") != F.col("__rep")).select(
-        F.col("__rep").alias("id_a"), F.col("doc").alias("id_b")
+    star = sigr.filter(F.col("id") != F.col("__rep")).select(
+        F.col("__rep").alias("id_a"), F.col("id").alias("id_b")
     )
-    # size-gated persist of the (doc, band, bucket) triples: at scale
+    # size-gated persist of the (id, band, bucket) triples: at scale
     # the self-join would otherwise run the hyperplane pandas UDF twice
     # over the corpus; below the gate the identical join sides share one
     # shuffle via ReusedExchange and a persist only adds a barrier
     banded = maybe_persist(
-        sigr.filter(F.col("doc") == F.col("__rep")).select(
-            "doc", F.posexplode(buckets(F.col("__v"))).alias("band", "bucket")
+        sigr.filter(F.col("id") == F.col("__rep")).select(
+            "id", F.posexplode(buckets(F.col("__v"))).alias("band", "bucket")
         )
     )
-    if max_bucket_size:
-        wb = W.partitionBy("band", "bucket")
-        sized = banded.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
-            "__m", F.min("doc").over(wb)
-        )
-        bucket_star = sized.filter(
-            (F.col("__n") > max_bucket_size) & (F.col("doc") != F.col("__m"))
-        ).select(F.col("__m").alias("id_a"), F.col("doc").alias("id_b"))
-        banded = sized.filter(F.col("__n") <= max_bucket_size).drop("__n", "__m")
-        star = star.unionByName(bucket_star)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .unionByName(star)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand, _ = _banded_candidates(banded, star, max_bucket_size)
     ea = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     eb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
     sim = F.round(cosine_batch(F.col("va"), F.col("vb")), round_to)
@@ -1008,18 +972,12 @@ def _portable_banded_vecs(
     audits).
 
     Returns ``(banded, star, rep_ids)``: ``banded`` = one (id, band,
-    bucket) row per REPRESENTATIVE (min id per BYTE-IDENTICAL vector —
-    the collapse key sound for cosine-verified screens, see
-    :func:`lsh_neardup_pairs`; the r12 bucket-array key silently
-    changed components because the verifier's score is not a function
-    of the buckets) — vectors are re-attached by id downstream so the
-    band join never shuffles embedding payloads; ``star`` = (id_a,
-    id_b) member edges of identical-vector groups (candidates by
-    construction: identical vectors collide in every band, and the
-    rep–member cosine is exactly 1.0); ``rep_ids`` = one (id,) row per
-    representative (the audit's sampling universe — every cosine of a
-    member equals its representative's bit-for-bit, so members are
-    exactly covered by rep rows)."""
+    bucket) row per REPRESENTATIVE (min id per BYTE-IDENTICAL vector,
+    the collapse key :func:`lsh_neardup_pairs` explains); ``star`` =
+    (id_a, id_b) member edges of identical-vector groups; ``rep_ids``
+    = one (id,) row per representative (the audit's sampling universe
+    — every cosine of a member equals its representative's
+    bit-for-bit, so members are exactly covered by rep rows)."""
     planes = _portable_planes(dim, bands * band_bits)
     v = to_double(F.col("__v"))
     bucket_cols = []
@@ -1078,28 +1036,23 @@ def lsh_banding_audit(
       ``n_true_pairs`` is what the screen finds.
     * ``random_nocollision`` — sha256-bucket neighbor pairs
       (``sha256(id) % random_buckets``, all-vs-all within bucket)
-      over signature REPRESENTATIVES (members of bucket-array-identical
-      groups are screened through their representative), minus any
-      band-colliding pair: every true pair here is a banding MISS.
-      ``random_buckets=None`` auto-sizes to ``max(est_rows // 2, 16)``
-      from a file-stat row estimate (exact ``count()`` fallback when
-      the source isn't stat-able) so buckets stay tiny at ANY corpus
-      size — a fixed count at large n gives n/count-sized buckets and
-      a quadratic within-bucket join (the ``dedup_audit`` sampling
-      design).
+      over REPRESENTATIVES (members of byte-identical-vector groups are
+      screened through their representative), minus any band-colliding
+      pair: every true pair here is a banding MISS.
+      ``random_buckets=None`` auto-sizes through
+      ``cache.auto_random_buckets`` so buckets stay tiny at ANY corpus
+      size (the ``dedup_audit`` sampling design).
 
     Output: ``(stratum, n_pairs, n_true_pairs, true_pair_rate)``.
     A healthy configuration shows ``random_nocollision.true_pair_rate``
     orders of magnitude below ``collision``'s; rising values say "add
     bands or shrink band_bits".  Everything (md5 planes, sha256
     buckets, fold-order dot products) is cross-engine deterministic.
-    ``max_bucket_size`` mirrors the screen's oversized-bucket
-    star-reduction, DEFAULT ON (``None`` → ``cache.auto_bucket_cap``,
-    the screen's rule; ``0`` audits the uncapped form): while the cap
-    is active an extra ``bucket_star_dropped`` accounting row reports
-    in ``n_pairs`` the within-bucket pairs the star-reduction declined
-    to emit (c(c-1)/2 - (c-1) per oversized (band, bucket), pre-dedup
-    across bands; other columns null — the guard's point is that these
+    ``max_bucket_size`` mirrors the screen's bucket cap (the screen's
+    default; ``0`` audits the uncapped form): while the cap is active
+    an extra ``bucket_star_dropped`` row reports in ``n_pairs`` the
+    pairs the cap declined to emit (see
+    ``operators.dedup._banded_candidates``; other columns null — these
     were never scored).
 
     Sizing rule (for the audit AND the screen it audits):
@@ -1110,71 +1063,14 @@ def lsh_banding_audit(
     linear at that size."""
     if random_buckets is not None and random_buckets < 1:
         raise ValueError("random_buckets must be >= 1")
+    max_bucket_size = resolve_bucket_cap(embeddings, max_bucket_size, 4 * dim + 16)
     if random_buckets is None:
-        from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-            estimated_source_rows,
-        )
-
-        # file-stat estimate when available; otherwise an exact count()
-        # — the dedup_audit rule: a fixed small fallback would give
-        # n/16-sized buckets and a quadratic within-bucket join on
-        # in-memory / non-stat-able sources
-        est_n = estimated_source_rows(embeddings, bytes_per_row=4 * dim + 16)
-        if not est_n:
-            est_n = embeddings.count()
-        random_buckets = max(est_n // 2, 16)
-    if max_bucket_size is None:
-        from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-            auto_bucket_cap,
-        )
-
-        max_bucket_size = auto_bucket_cap(embeddings, bytes_per_row=4 * dim + 16)
-    elif max_bucket_size < 0:
-        raise ValueError("max_bucket_size must be >= 0 (0 = uncapped)")
+        random_buckets = auto_random_buckets(embeddings, 4 * dim + 16)
     e, star, rep_ids = _portable_banded_vecs(
         embeddings, bands, band_bits, id_col, vec_col, dim
     )
-    dropped = None
-    if max_bucket_size:
-        wb = W.partitionBy("band", "bucket")
-        sized = e.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
-            "__m", F.min("id").over(wb)
-        )
-        bucket_star = sized.filter(
-            (F.col("__n") > max_bucket_size) & (F.col("id") != F.col("__m"))
-        ).select(F.col("__m").alias("id_a"), F.col("id").alias("id_b"))
-        e = sized.filter(F.col("__n") <= max_bucket_size).drop("__n", "__m")
-        star = star.unionByName(bucket_star)
-        c = F.col("c")
-        dropped = (
-            sized.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(c > max_bucket_size)
-            .agg(
-                F.coalesce(
-                    F.sum(c * (c - 1) / 2 - (c - 1)).cast("long"), F.lit(0)
-                ).alias("n_pairs")
-            )
-            .select(
-                F.lit("bucket_star_dropped").alias("stratum"),
-                F.col("n_pairs"),
-                F.lit(None).cast("long").alias("n_true_pairs"),
-                F.lit(None).cast("double").alias("true_pair_rate"),
-            )
-        )
-    a, b = e.alias("a"), e.alias("b")
-    cand = maybe_persist(
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .unionByName(star)
-        .dropDuplicates(["id_a", "id_b"]),
-        min_bytes=0,
-    )
+    cand, dropped = _banded_candidates(e, star, max_bucket_size)
+    cand = maybe_persist(cand, min_bytes=0)
     vecs = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec")
     )
@@ -1233,7 +1129,15 @@ def lsh_banding_audit(
         )
     )
     if dropped is not None:
-        out = out.unionByName(dropped)
+        # what the bucket cap declined to score (see _banded_candidates)
+        out = out.unionByName(
+            dropped.select(
+                F.lit("bucket_star_dropped").alias("stratum"),
+                F.col("n_pairs"),
+                F.lit(None).cast("long").alias("n_true_pairs"),
+                F.lit(None).cast("double").alias("true_pair_rate"),
+            )
+        )
     return out
 
 
@@ -1261,45 +1165,14 @@ def lsh_neardup_pairs_portable(
     path whose recall is property-tested against this family's exact
     base (`tests/test_llmops.py`).
 
-    Shares the fast path's scale guards: byte-identical-vector collapse
-    (always on — provably component-preserving, see
-    :func:`lsh_neardup_pairs`) and the DEFAULT-ON ``max_bucket_size``
-    star-reduction (``None`` → ``cache.auto_bucket_cap``; ``0`` opts
-    out); vectors are re-attached by id after candidate dedup, so the
-    band join shuffles no embedding payloads."""
-    if max_bucket_size is None:
-        from multi_sensor_data_pipeline_for_robotics__spark.cache import (
-            auto_bucket_cap,
-        )
-
-        max_bucket_size = auto_bucket_cap(embeddings, bytes_per_row=4 * dim + 16)
-    elif max_bucket_size < 0:
-        raise ValueError("max_bucket_size must be >= 0 (0 = uncapped)")
+    Scale guards and their soundness: as :func:`lsh_neardup_pairs`;
+    vectors are re-attached by id after candidate dedup, so the band
+    join shuffles no embedding payloads."""
+    max_bucket_size = resolve_bucket_cap(embeddings, max_bucket_size, 4 * dim + 16)
     e, star, _ = _portable_banded_vecs(
         embeddings, bands, band_bits, id_col, vec_col, dim
     )
-    if max_bucket_size:
-        wb = W.partitionBy("band", "bucket")
-        sized = e.withColumn("__n", F.count(F.lit(1)).over(wb)).withColumn(
-            "__m", F.min("id").over(wb)
-        )
-        bucket_star = sized.filter(
-            (F.col("__n") > max_bucket_size) & (F.col("id") != F.col("__m"))
-        ).select(F.col("__m").alias("id_a"), F.col("id").alias("id_b"))
-        e = sized.filter(F.col("__n") <= max_bucket_size).drop("__n", "__m")
-        star = star.unionByName(bucket_star)
-    a, b = e.alias("a"), e.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .unionByName(star)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand, _ = _banded_candidates(e, star, max_bucket_size)
     vecs = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("id"), to_double(F.col(vec_col)).alias("vec")
     )

@@ -30,8 +30,8 @@ Portability: hashing is the repo-standard sha256 prefix (same trick as
 ``operators.dedup.minhash_signatures_portable``), probabilities are
 exact integer-count ratios, and only the FINAL per-doc aggregate is
 rounded (6 dp) — logs of count ratios are not lattice-aligned, so the
-half-boundary rounding trap that bit decimal inputs (see ORACLES_r08
-on ``feat_user_rfm``) cannot occur here.
+half-boundary rounding trap that bit decimal inputs (see git history
+for ``feat_user_rfm``) cannot occur here.
 """
 
 from __future__ import annotations

@@ -193,19 +193,14 @@ def stream_components_maintain_to_parquet(
     """
     from multi_sensor_data_pipeline_for_robotics__spark.operators.dedup import (
         _banded_portable,
+        _check_bands,
+        _portable_est,
+        _portable_sig_fn,
         components_merge,
-        minhash_signatures_portable,
-        minhash_signatures_tokenfold,
     )
 
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
-    if hash_family == "sha256":
-        sig_fn = minhash_signatures_portable
-    elif hash_family == "tokenfold":
-        sig_fn = minhash_signatures_tokenfold
-    else:
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
+    _check_bands(num_hashes, bands)
+    sig_fn = _portable_sig_fn(hash_family)
     labels_path = out_dir.rstrip("/") + "/labels"
     sigs_path = out_dir.rstrip("/") + "/sigs"
     hcols = [f"h{i}" for i in range(num_hashes)]
@@ -242,10 +237,6 @@ def stream_components_maintain_to_parquet(
         side = nsig if stored is None else stored.unionByName(nsig)
         nb = _banded_portable(nsig, num_hashes, bands).alias("a")
         sb = _banded_portable(side, num_hashes, bands).alias("b")
-        matches = sum(
-            F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)
-            for i in range(num_hashes)
-        )
         pairs = (
             nb.join(
                 sb,
@@ -256,7 +247,7 @@ def stream_components_maintain_to_parquet(
             .select(
                 F.least(F.col("a.doc"), F.col("b.doc")).alias("doc_a"),
                 F.greatest(F.col("a.doc"), F.col("b.doc")).alias("doc_b"),
-                (matches.cast("double") / num_hashes).alias("est_jaccard"),
+                _portable_est("a.", "b.", num_hashes).alias("est_jaccard"),
             )
             .filter(F.col("est_jaccard") >= threshold)
             .dropDuplicates(["doc_a", "doc_b"])
@@ -326,8 +317,13 @@ def collect_lsh_screen_model(
     should use the foreachBatch join screen
     (:func:`stream_corpus_screen_to_parquet`), which never
     materializes signatures on the driver."""
-    if num_hashes % bands:
-        raise ValueError("num_hashes must be divisible by bands")
+    from multi_sensor_data_pipeline_for_robotics__spark.operators.dedup import (
+        _check_bands,
+        _portable_sig_fn,
+    )
+
+    _check_bands(num_hashes, bands)
+    _portable_sig_fn(hash_family)  # unknown family: ValueError before any job
     # lazy checkpoint: the guard's count() and the collect() below
     # otherwise each replay the full signature pipeline (shingle
     # explode + sha256 + num_hashes-way groupBy) from scratch
@@ -343,8 +339,6 @@ def collect_lsh_screen_model(
                 " against the stored signature table) or raise"
                 " max_model_rows."
             )
-    if hash_family not in ("sha256", "tokenfold"):
-        raise ValueError(f"unknown hash_family: {hash_family!r}")
     r = num_hashes // bands
     mask = 0x7FFFFFFF
     # _family records which portable base built the signatures so the

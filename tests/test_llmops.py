@@ -562,6 +562,131 @@ def test_minhash_max_bucket_size_guard(spark):
         D.minhash_lsh_pairs_portable(docs, max_bucket_size=-1, **kw)
 
 
+_BAD_LSH_CALLS = {
+    "minhash_uneven_bands": (
+        lambda d: D.minhash_lsh_pairs(d, num_hashes=10, bands=4), "divisible"
+    ),
+    "portable_uneven_bands": (
+        lambda d: D.minhash_lsh_pairs_portable(d, num_hashes=10, bands=4),
+        "divisible",
+    ),
+    "corpus_uneven_bands": (
+        lambda d: D.dedup_against_corpus(d, d, num_hashes=10, bands=4),
+        "divisible",
+    ),
+    "minhash_zero_bands": (lambda d: D.minhash_lsh_pairs(d, bands=0), "divisible"),
+    "ngram_threshold_above_1": (
+        lambda d: D.ngram_jaccard_pairs(d, threshold=1.5, max_shingle_df=None),
+        r"\[0, 1\]",
+    ),
+    "ngram_threshold_negative": (
+        lambda d: D.ngram_jaccard_pairs(d, threshold=-0.1), r"\[0, 1\]"
+    ),
+    "minhash_threshold": (
+        lambda d: D.minhash_lsh_pairs(d, threshold=1.01), r"\[0, 1\]"
+    ),
+    "portable_threshold": (
+        lambda d: D.minhash_lsh_pairs_portable(d, threshold=-1), r"\[0, 1\]"
+    ),
+    "corpus_threshold": (
+        lambda d: D.dedup_against_corpus(d, d, threshold=2.0), r"\[0, 1\]"
+    ),
+    "corpus_hash_family": (
+        lambda d: D.dedup_against_corpus(d, d, hash_family="md5"), "hash_family"
+    ),
+    "minhash_negative_cap": (
+        lambda d: D.minhash_lsh_pairs(d, max_bucket_size=-1), ">= 0"
+    ),
+    "audit_negative_cap": (
+        lambda d: D.dedup_audit(d, max_bucket_size=-1), ">= 0"
+    ),
+    "sign_lsh_negative_cap": (
+        lambda d: SIM.lsh_neardup_pairs(d, max_bucket_size=-1), ">= 0"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_LSH_CALLS))
+def test_bad_lsh_args_raise_before_any_spark_job(spark, docs, case):
+    """Bad band/threshold/cap arguments of the dedup screens are a
+    ValueError raised before the first Spark job (not an assert that
+    ``python -O`` strips, nor a runtime error deep in a plan)."""
+    call, match = _BAD_LSH_CALLS[case]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match=match):
+        call(docs)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_banded_candidates_core_matches_reference(spark):
+    """The shared cap → band self-join → star → dedup stage against a
+    pure-Python reference: a 4-member hot bucket, a pair colliding in
+    two bands, a lone doc; caps 0 (off), 1, the hot bucket's size and
+    above every bucket; with
+    a carried payload scored asymmetrically (so the star side order is
+    pinned) and ids-only; plus the dropped-pair count."""
+    from collections import defaultdict
+
+    payload = {3: 30, 7: 70, 9: 90, 12: 120, 20: 200, 21: 210, 40: 400}
+    rows = [
+        (12, 0, 100), (3, 0, 100), (9, 0, 100), (7, 0, 100),  # hot bucket
+        (12, 1, 12), (3, 1, 3), (9, 1, 9), (7, 1, 7),
+        (20, 0, 200), (21, 0, 200), (20, 1, 300), (21, 1, 300),  # 2 bands
+        (40, 0, 400), (40, 1, 500),  # lone doc
+    ]
+    banded = spark.createDataFrame(
+        [(i, band, bucket, payload[i]) for i, band, bucket in rows],
+        "id long, band int, bucket long, p long",
+    )
+    # collapse star: one member edge, plus a duplicate of a join pair
+    star = spark.createDataFrame(
+        [(40, 41, 400 * 1000 + 410), (20, 21, 200 * 1000 + 210)],
+        "id_a long, id_b long, s long",
+    )
+
+    def score(pa, pb):
+        return (F.col(f"{pa}p") * 1000 + F.col(f"{pb}p")).alias("s")
+
+    def reference(cap):
+        groups = defaultdict(list)
+        for i, band, bucket in rows:
+            groups[(band, bucket)].append(i)
+        pairs, dropped = {(40, 41), (20, 21)}, 0
+        for ids in groups.values():
+            ids, c = sorted(ids), len(ids)
+            if cap and c > cap:
+                pairs |= {(ids[0], x) for x in ids[1:]}  # star to min id
+                dropped += c * (c - 1) // 2 - (c - 1)
+            else:
+                pairs |= {(a, b) for k, a in enumerate(ids) for b in ids[k + 1:]}
+        return pairs, (dropped if cap else None)
+
+    for cap in (0, 1, 4, 10):  # 4 = the hot bucket's size: not capped
+        want, want_dropped = reference(cap)
+        got, dropped = D._banded_candidates(banded, star, cap, score=score)
+        got_rows = got.collect()
+        assert sorted((r.id_a, r.id_b) for r in got_rows) == sorted(want), cap
+        assert all(
+            r.s == payload.get(r.id_a, 400) * 1000 + payload.get(r.id_b, 410)
+            for r in got_rows
+        )
+        if want_dropped is None:
+            assert dropped is None
+        else:
+            assert dropped.first().n_pairs == want_dropped, cap
+        ids_only, _ = D._banded_candidates(
+            banded.select("id", "band", "bucket"), star.drop("s"), cap
+        )
+        assert ids_only.columns == ["id_a", "id_b"]
+        assert sorted(map(tuple, ids_only.collect())) == sorted(want), cap
+    # cap 1: the hot bucket (min id 3) and both 2-member buckets of the
+    # pair are stars; 4*3/2 - 3 = 3 pairs of the hot bucket are dropped
+    assert reference(1) == (
+        {(3, 7), (3, 9), (3, 12), (20, 21), (40, 41)}, 3
+    )
+
+
 def test_phash_neardup_recalls_jittered_copies(spark):
     """Average-hash near-dup over REAL decoded pixels: one-byte-jittered
     copies of a class image hash within Hamming <= 3 of each other (a

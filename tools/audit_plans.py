@@ -3,7 +3,9 @@
 exchanges / codegen stages, list join strategies, and check parquet
 pushdown — the evidence behind SCALE.md's claims.
 
-Usage:  python tools/audit_plans.py [sf_dir] > PLANS_r0N.md
+Usage:  python tools/audit_plans.py [sf_dir] > plans.md
+
+(Earlier rounds' reports are in git history.)
 """
 
 from __future__ import annotations
