@@ -1,18 +1,19 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three tiers, trading exactness for scale:
-  - ``cosine_topk``      exact brute force — broadcast the (small) query
-                         set against the corpus; one scan, no corpus
-                         shuffle; per-query top-k via window.
-  - ``neardup_pairs``    exact all-pairs >= threshold — quadratic;
-                         correctness baseline and oracle target.
-  - ``lsh_neardup_pairs`` random-hyperplane (sign) LSH — candidate
-                         pairs from band equi-joins, verified with the
-                         exact cosine; approximate recall, linear-ish
-                         cost. The scale path for 100 TB corpora.
-  - ``ivf_topk``         inverted-file ANN: partition the corpus by
-                         nearest coarse centroid, probe the closest
-                         ``nprobe`` lists per query.
+Exact brute force: ``cosine_topk``, ``neardup_pairs`` and
+``hard_negatives``, all oracle-checked. The approximate operators come
+as float / fixed-point pairs; the fixed-point member works on the
+integer lattice ``floor(unit * scale)`` with exact int64 folds, so a
+SQL replica replays it. The oracle-checked member of each pair:
+
+  - ``lsh_neardup_pairs`` / ``lsh_neardup_pairs_portable``: portable;
+  - ``kmeans_centroids`` / ``kmeans_centroids_fixedpoint``: fixed-point;
+  - ``ivf_topk`` / ``ivf_topk_fixedpoint``: both (float untrained only);
+  - ``pq_topk`` / ``pq_topk_fixedpoint``: fixed-point;
+  - ``ivfpq_topk`` / ``ivfpq_topk_fixedpoint``: fixed-point.
+
+Each stack writes each ANN stage (train, assign/encode, probe, rank)
+once; the two share only the top-k tail and the first-N init collect.
 """
 
 from __future__ import annotations
@@ -42,6 +43,33 @@ from multi_sensor_data_pipeline_for_robotics__spark.operators.dedup import (
 from multi_sensor_data_pipeline_for_robotics__spark.sources.tables import ensure_parallelism
 
 
+def _check_ann(k: int = 1, nlist: int = 1, nprobe: int = 1, dim: int = 0, m: int = 1):
+    """Reject bad ANN arguments before the first Spark job."""
+    for name, v in (("k", k), ("nlist", nlist), ("nprobe", nprobe)):
+        if v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
+    if m < 1 or dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m {m}")
+
+
+def _topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """The one ranking stage: per query, ``score`` DESC then candidate
+    id ASC, keep ranks 1..k of ``(query_id, cand_id, score, rank)``."""
+    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("cand_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "cand_id", score, "rank")
+    )
+
+
+def _first_n(embeddings: DataFrame, n: int, id_col: str, vec_col: str) -> list:
+    """The first ``n`` corpus vectors by id, exactly as collected — the
+    deterministic, RNG-free init of every float quantizer."""
+    rows = embeddings.orderBy(id_col).limit(n).select(F.col(vec_col).alias("v")).collect()
+    return [r["v"] for r in rows]
+
+
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -58,6 +86,7 @@ def cosine_topk(
     (query, candidate, sim) triples. Deterministic order: rounded sim
     DESC, then candidate id ASC.
     """
+    _check_ann(k)
     e = embeddings.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cand_vec")
     )
@@ -69,12 +98,7 @@ def cosine_topk(
         e.join(F.broadcast(q), F.col("cand_id") != F.col("query_id"))
         .withColumn("cosine", sim)
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _topk(scored, "cosine", k)
 
 
 def neardup_pairs(
@@ -236,6 +260,83 @@ def lsh_neardup_pairs(
     )
 
 
+def _float_kernels():
+    """The float stack's numpy kernels, shared by trainers and encoders.
+
+    ``unit(X)``: rows scaled to unit norm. ``pq_prep(X, C, residual)``:
+    unit rows; with coarse centroids ``C`` also each row's list (argmax
+    cosine, ties -> lowest list id), and with ``residual`` the PQ input
+    becomes ``x - c(x)``. ``pq_codes(S, B)``: per-subspace argmin of
+    squared L2 of ``S`` (n, m, dsub) against the books ``B`` (m, ksub,
+    dsub), ties -> lowest code."""
+
+    def unit(X):
+        return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+
+    def pq_prep(X, C, residual):
+        X = unit(X)
+        if C is None:
+            return None, X
+        a = np.argmax(X @ C.T, axis=1)
+        return a, (X - C[a] if residual else X)
+
+    def pq_codes(S, B):
+        return np.stack(
+            [
+                np.argmin(((S[:, j, None, :] - B[j][None, :, :]) ** 2).sum(-1), axis=1)
+                for j in range(len(B))
+            ],
+            axis=1,
+        )
+
+    return unit, pq_prep, pq_codes
+
+
+# the kernels run inside Python workers: built in a function scope so
+# Spark pickles them by value (a module-level function pickles by
+# reference and would need this package importable on every worker)
+_unit, _pq_prep, _pq_codes = _float_kernels()
+
+
+def _lloyd(embeddings: DataFrame, vec_col: str, state, iters: int, accumulate, update):
+    """The float Lloyd driver: each round is ONE ``mapInPandas`` corpus
+    scan with assign + update fused — ``accumulate(X, state, sums,
+    cnt)`` assigns an Arrow batch and adds it into per-cell sums and
+    counts, and only those partials (``state``-sized) leave a
+    partition. The driver reduces them and ``update(state, sums, cnt)``
+    makes the next state; an empty corpus stops training."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    corpus = embeddings.select(F.col(vec_col).alias("__v"))
+    for _ in range(iters):
+        S = state  # closure snapshot for this round
+
+        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            sums = np.zeros_like(S)
+            cnt = np.zeros(S.shape[:-1], dtype=np.int64)
+            for b in batches:
+                if len(b) == 0:
+                    continue
+                X = np.stack(b["__v"].to_numpy()).astype(np.float64)
+                accumulate(X, S, sums, cnt)
+            if cnt.sum():
+                yield pd.DataFrame(
+                    {"sums": [sums.ravel().tolist()], "cnt": [cnt.ravel().tolist()]}
+                )
+
+        parts = corpus.mapInPandas(
+            partials, schema="sums array<double>, cnt array<long>"
+        ).collect()
+        if not parts:
+            break
+        sums = np.sum([np.asarray(p["sums"]).reshape(S.shape) for p in parts], axis=0)
+        cnt = np.sum([np.asarray(p["cnt"]).reshape(S.shape[:-1]) for p in parts], axis=0)
+        state = update(S, sums, cnt)
+    return state
+
+
 def kmeans_centroids(
     embeddings: DataFrame,
     nlist: int = 16,
@@ -261,71 +362,37 @@ def kmeans_centroids(
     a ``.sample()`` of the corpus — the quantizer needs only
     ~100×nlist training points; pass that sample as ``embeddings``.
     """
-    from typing import Iterator
 
-    import pandas as pd
+    def accumulate(X, C, sums, cnt):
+        a = np.argmax(_unit(X) @ C.T, axis=1)  # ties -> lowest cent_id
+        np.add.at(sums, a, X)
+        np.add.at(cnt, a, 1)
 
-    init = (
-        embeddings.orderBy(id_col).limit(nlist).select(F.col(vec_col).alias("v")).collect()
-    )
-    cents = np.asarray([r["v"] for r in init], dtype=np.float64)
-    cents /= np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
-    corpus = embeddings.select(F.col(vec_col).alias("__v"))
-    for _ in range(iters):
-        C = cents  # closure snapshot for this round
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            k, d = C.shape
-            sums = np.zeros((k, d), dtype=np.float64)
-            cnt = np.zeros(k, dtype=np.int64)
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                X = np.stack(b["__v"].to_numpy()).astype(np.float64)
-                Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-                a = np.argmax(Xn @ C.T, axis=1)  # ties -> lowest cent_id
-                np.add.at(sums, a, X)
-                np.add.at(cnt, a, 1)
-            if cnt.sum():
-                yield pd.DataFrame(
-                    {"sums": [sums.ravel().tolist()], "cnt": [cnt.tolist()]}
-                )
-
-        parts = corpus.mapInPandas(
-            partials, schema="sums array<double>, cnt array<long>"
-        ).collect()
-        if not parts:
-            break
-        k, d = cents.shape
-        sums = np.sum([np.asarray(p["sums"]).reshape(k, d) for p in parts], axis=0)
-        cnt = np.sum([np.asarray(p["cnt"]) for p in parts], axis=0)
-        new = cents.copy()
-        for ci in range(k):
+    def update(C, sums, cnt):
+        new = C.copy()
+        for ci in range(len(C)):
             if cnt[ci] > 0:
                 v = sums[ci] / cnt[ci]
                 n = np.linalg.norm(v)
                 if n > 1e-12:
                     new[ci] = v / n
-        cents = new
+        return new
+
+    init = _unit(np.asarray(_first_n(embeddings, nlist, id_col, vec_col), dtype=np.float64))
+    cents = _lloyd(embeddings, vec_col, init, iters, accumulate, update)
     return [[float(x) for x in c] for c in cents]
 
 
-def _first_n_centroids(
-    embeddings: DataFrame, nlist: int, id_col: str, vec_col: str
+def _coarse_centroids(
+    embeddings: DataFrame, nlist: int, iters: int, id_col: str, vec_col: str
 ) -> list:
-    """Deterministic coarse centroids: the first ``nlist`` corpus
-    vectors by id — stable ids 0..nlist-1, reproducible in any engine
-    (the oracle-checked quantizer shared by :func:`ivf_topk` and
-    :func:`diverse_prototypes`)."""
-    return [
-        (i, list(r["v"]))
-        for i, r in enumerate(
-            embeddings.orderBy(id_col)
-            .limit(nlist)
-            .select(F.col(vec_col).alias("v"))
-            .collect()
-        )
-    ]
+    """The float coarse quantizer: :func:`kmeans_centroids` when
+    ``iters > 0``, else the first ``nlist`` corpus vectors by id (as
+    collected, unnormalized — the oracle-checked quantizer shared by
+    :func:`ivf_topk` and :func:`diverse_prototypes`)."""
+    if iters > 0:
+        return kmeans_centroids(embeddings, nlist, iters, id_col, vec_col)
+    return _first_n(embeddings, nlist, id_col, vec_col)
 
 
 def _cent_norm(vec: list) -> float:
@@ -400,59 +467,42 @@ def ivf_topk(
     Scale shape: corpus assignment is one broadcast-join scan;
     candidate scoring touches ~nprobe/nlist of the corpus per query.
     """
+    _check_ann(k, nlist, nprobe)
     spark = embeddings.sparkSession
-    if centroids is not None:
-        cent_rows = [(i, [float(x) for x in v]) for i, v in enumerate(centroids)]
-    elif train_iters > 0:
-        trained = kmeans_centroids(embeddings, nlist, train_iters, id_col, vec_col)
-        cent_rows = list(enumerate(trained))
-    else:
-        # stable centroid ids 0..nlist-1 by source id order
-        cent_rows = _first_n_centroids(embeddings, nlist, id_col, vec_col)
-    cents = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in cent_rows],
-        "cent_id int, cent_vec array<double>",
-    )
-
-    def assign_expr(vd, vnorm):
-        # corpus assignment via the shared narrow-argmax projection
-        # (see _assign_pairs for the exactness argument)
-        return (-F.array_max(_assign_pairs(cent_rows, vd, vnorm))["ncid"]).cast(
-            "int"
-        )
+    if centroids is None:
+        # stable centroid ids 0..nlist-1
+        centroids = _coarse_centroids(embeddings, nlist, train_iters, id_col, vec_col)
+    cent_rows = [(i, [float(x) for x in v]) for i, v in enumerate(centroids)]
+    cents = spark.createDataFrame(cent_rows, "cent_id int, cent_vec array<double>")
 
     ecols = [F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cand_vec")]
     if label_col is not None:
         ecols.append(F.col(label_col).alias("cand_label"))
     e = embeddings.select(*ecols)
+    best = F.array_max(_assign_pairs(cent_rows, F.col("__vd"), F.col("__vn")))
     assigned = (
         e.withColumn("__vd", to_double(F.col("cand_vec")))
         .withColumn("__vn", l2_norm(F.col("__vd")))
-        .withColumn("list_id", assign_expr(F.col("__vd"), F.col("__vn")))
+        # corpus assignment via the shared narrow-argmax projection
+        # (see _assign_pairs for the exactness argument)
+        .withColumn("list_id", (-best["ncid"]).cast("int"))
         .drop("__vd", "__vn")
     )
-
-    def nearest_lists(df, vcol, out, n):
-        # query-side probe ranking (tiny input: |queries| rows) — the
-        # broadcast cross join + window is fine here and keeps the
-        # nprobe ranking in one declarative shape
-        scored = df.join(F.broadcast(cents), how="cross").withColumn(
-            "__sim", cosine(F.col(vcol), F.col("cent_vec"))
-        )
-        w = W.partitionBy(*[c for c in df.columns if c != vcol][:1]).orderBy(
-            F.col("__sim").desc(), F.col("cent_id").asc()
-        )
-        return (
-            scored.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= n)
-            .select(*df.columns, F.col("cent_id").alias(out))
-        )
 
     qcols = [F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("query_vec")]
     if label_col is not None:
         qcols.append(F.col(label_col).alias("query_label"))
     q = queries.select(*qcols)
-    probes = nearest_lists(q, "query_vec", "list_id", nprobe)
+    # query-side probe ranking (tiny input: |queries| rows) — the
+    # broadcast cross join + window is fine here
+    wq = W.partitionBy("query_id").orderBy(F.col("__sim").desc(), F.col("cent_id").asc())
+    probes = (
+        q.join(F.broadcast(cents), how="cross")
+        .withColumn("__sim", cosine(F.col("query_vec"), F.col("cent_vec")))
+        .withColumn("__rk", F.row_number().over(wq))
+        .filter(F.col("__rk") <= nprobe)
+        .select(*q.columns, F.col("cent_id").alias("list_id"))
+    )
 
     sim = F.round(cosine(F.col("cand_vec"), F.col("query_vec")), round_to)
     scored = (
@@ -462,13 +512,41 @@ def ivf_topk(
     )
     if label_col is not None:
         scored = scored.filter(F.col("cand_label") != F.col("query_label"))
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-        .dropDuplicates(["query_id", "cand_id"])
-    )
+    return _topk(scored, "cosine", k).dropDuplicates(["query_id", "cand_id"])
+
+
+def _pq_train(
+    embeddings: DataFrame,
+    centroids: list | None,
+    m: int,
+    ksub: int,
+    iters: int,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+) -> list:
+    """The float PQ trainer behind :func:`pq_codebooks` (``centroids``
+    None: quantize the unit vector) and :func:`residual_codebooks`
+    (quantize the residual ``x - c(x)`` against unit ``centroids``)."""
+    _check_ann(dim=dim, m=m)
+    C = None if centroids is None else _unit(np.asarray(centroids, dtype=np.float64))
+    X0 = np.asarray(_first_n(embeddings, ksub, id_col, vec_col), dtype=np.float64)
+    books = _pq_prep(X0, C, True)[1].reshape(ksub, m, dim // m).transpose(1, 0, 2).copy()
+
+    def accumulate(X, B, sums, cnt):
+        S = _pq_prep(X, C, True)[1].reshape(len(X), len(B), -1)  # (n, m, dsub)
+        a = _pq_codes(S, B)
+        for j in range(len(B)):
+            np.add.at(sums[j], a[:, j], S[:, j, :])
+            np.add.at(cnt[j], a[:, j], 1)
+
+    def update(B, sums, cnt):
+        new = B.copy()
+        nz = cnt > 0
+        new[nz] = sums[nz] / cnt[nz][:, None]
+        return new
+
+    return _lloyd(embeddings, vec_col, books, iters, accumulate, update).tolist()
 
 
 def pq_codebooks(
@@ -496,56 +574,7 @@ def pq_codebooks(
     Returns a nested list ``[m][ksub][dsub]`` (plain floats — ships in
     task closures).
     """
-    from typing import Iterator
-
-    import pandas as pd
-
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    init = (
-        embeddings.orderBy(id_col).limit(ksub).select(F.col(vec_col).alias("v")).collect()
-    )
-    X0 = np.asarray([r["v"] for r in init], dtype=np.float64)
-    X0 /= np.maximum(np.linalg.norm(X0, axis=1, keepdims=True), 1e-12)
-    books = X0.reshape(ksub, m, dsub).transpose(1, 0, 2).copy()  # (m, ksub, dsub)
-    corpus = embeddings.select(F.col(vec_col).alias("__v"))
-    for _ in range(iters):
-        B = books
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sums = np.zeros_like(B)  # (m, ksub, dsub)
-            cnt = np.zeros((B.shape[0], B.shape[1]), dtype=np.int64)
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                X = np.stack(b["__v"].to_numpy()).astype(np.float64)
-                X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-                S = X.reshape(len(X), B.shape[0], -1)  # (n, m, dsub)
-                for j in range(B.shape[0]):
-                    d2 = ((S[:, j, None, :] - B[j][None, :, :]) ** 2).sum(-1)
-                    a = np.argmin(d2, axis=1)  # ties -> lowest code
-                    np.add.at(sums[j], a, S[:, j, :])
-                    np.add.at(cnt[j], a, 1)
-            if cnt.sum():
-                yield pd.DataFrame(
-                    {"sums": [sums.ravel().tolist()], "cnt": [cnt.ravel().tolist()]}
-                )
-
-        parts = corpus.mapInPandas(
-            partials, schema="sums array<double>, cnt array<long>"
-        ).collect()
-        if not parts:
-            break
-        sums = np.sum([np.asarray(p["sums"]).reshape(books.shape) for p in parts], axis=0)
-        cnt = np.sum(
-            [np.asarray(p["cnt"]).reshape(books.shape[:2]) for p in parts], axis=0
-        )
-        new = books.copy()
-        nz = cnt > 0
-        new[nz] = sums[nz] / cnt[nz][:, None]
-        books = new
-    return books.tolist()
+    return _pq_train(embeddings, None, m, ksub, iters, dim, id_col, vec_col)
 
 
 def residual_codebooks(
@@ -566,66 +595,48 @@ def residual_codebooks(
     resolution on the part of the vector the coarse quantizer missed —
     higher recall at equal bits than whole-vector PQ.
 
-    Same scale shape as :func:`pq_codebooks`: each Lloyd round is ONE
-    ``mapInPandas`` corpus scan with coarse-assign + residual + all-m
-    subspace assign/update fused; only ``m x ksub x (dsub+1)`` partial
-    doubles leave each partition. Init is deterministic (residuals of
-    the first ``ksub`` corpus vectors by id, assigned driver-side).
+    Same scale shape as :func:`pq_codebooks` (it is that trainer run on
+    residuals): each Lloyd round is ONE ``mapInPandas`` corpus scan
+    with coarse-assign + residual + all-m subspace assign/update fused;
+    only ``m x ksub x (dsub+1)`` partial doubles leave each partition.
+    Init is deterministic (residuals of the first ``ksub`` corpus
+    vectors by id, assigned driver-side).
     """
-    from typing import Iterator
+    return _pq_train(embeddings, centroids, m, ksub, iters, dim, id_col, vec_col)
 
-    import pandas as pd
 
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    C = np.asarray(centroids, dtype=np.float64)
-    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    init = (
-        embeddings.orderBy(id_col).limit(ksub).select(F.col(vec_col).alias("v")).collect()
+def _pq_encode(
+    embeddings: DataFrame,
+    codebooks: list,
+    id_col: str,
+    vec_col: str,
+    centroids: list | None = None,
+    residual: bool = False,
+) -> DataFrame:
+    """The one float encoder, one Arrow-batched pass with the books (and
+    unit ``centroids``) in the closure: ``(id, pq_codes)``, or with
+    ``centroids`` ``(id, list_id, pq_codes)`` — coarse assignment and
+    encoding need the same unit vector, so fusing them is one corpus
+    scan and no join; ``residual`` encodes ``x - c(x)``."""
+    from pyspark.sql.functions import pandas_udf
+
+    C = None if centroids is None else _unit(np.asarray(centroids, dtype=np.float64))
+    B = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
+    fields = "pq_codes: array<int>" if C is None else "list_id: int, pq_codes: array<int>"
+
+    @pandas_udf(f"struct<{fields}>")
+    def enc(vecs):
+        import pandas as pd
+
+        a, S = _pq_prep(np.stack(vecs.to_numpy()).astype(np.float64), C, residual)
+        out = {"pq_codes": list(_pq_codes(S.reshape(len(S), len(B), -1), B).astype(np.int32))}
+        if a is not None:
+            out = {"list_id": a.astype(np.int32), **out}
+        return pd.DataFrame(out)
+
+    return embeddings.select(F.col(id_col), enc(F.col(vec_col)).alias("__e")).select(
+        id_col, "__e.*"
     )
-    X0 = np.asarray([r["v"] for r in init], dtype=np.float64)
-    X0 /= np.maximum(np.linalg.norm(X0, axis=1, keepdims=True), 1e-12)
-    R0 = X0 - C[np.argmax(X0 @ C.T, axis=1)]
-    books = R0.reshape(ksub, m, dsub).transpose(1, 0, 2).copy()  # (m, ksub, dsub)
-    corpus = embeddings.select(F.col(vec_col).alias("__v"))
-    for _ in range(iters):
-        B = books
-
-        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sums = np.zeros_like(B)  # (m, ksub, dsub)
-            cnt = np.zeros((B.shape[0], B.shape[1]), dtype=np.int64)
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                X = np.stack(b["__v"].to_numpy()).astype(np.float64)
-                X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-                R = X - C[np.argmax(X @ C.T, axis=1)]  # ties -> lowest cent_id
-                S = R.reshape(len(R), B.shape[0], -1)  # (n, m, dsub)
-                for j in range(B.shape[0]):
-                    d2 = ((S[:, j, None, :] - B[j][None, :, :]) ** 2).sum(-1)
-                    a = np.argmin(d2, axis=1)  # ties -> lowest code
-                    np.add.at(sums[j], a, S[:, j, :])
-                    np.add.at(cnt[j], a, 1)
-            if cnt.sum():
-                yield pd.DataFrame(
-                    {"sums": [sums.ravel().tolist()], "cnt": [cnt.ravel().tolist()]}
-                )
-
-        parts = corpus.mapInPandas(
-            partials, schema="sums array<double>, cnt array<long>"
-        ).collect()
-        if not parts:
-            break
-        sums = np.sum([np.asarray(p["sums"]).reshape(books.shape) for p in parts], axis=0)
-        cnt = np.sum(
-            [np.asarray(p["cnt"]).reshape(books.shape[:2]) for p in parts], axis=0
-        )
-        new = books.copy()
-        nz = cnt > 0
-        new[nz] = sums[nz] / cnt[nz][:, None]
-        books = new
-    return books.tolist()
 
 
 def residual_encode(
@@ -639,31 +650,7 @@ def residual_encode(
     ``(id, list_id, pq_codes)``. Both steps need the same normalized
     vector, so fusing them halves the corpus scans vs assign-then-encode
     and the downstream join carries codes only, never floats."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    B = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
-
-    @pandas_udf("struct<list_id: int, pq_codes: array<int>>")
-    def enc(vecs):
-        import pandas as pd
-
-        X = np.stack(vecs.to_numpy()).astype(np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        a = np.argmax(X @ C.T, axis=1)
-        S = (X - C[a]).reshape(len(X), B.shape[0], -1)
-        out = np.empty((len(X), B.shape[0]), dtype=np.int32)
-        for j in range(B.shape[0]):
-            d2 = ((S[:, j, None, :] - B[j][None, :, :]) ** 2).sum(-1)
-            out[:, j] = np.argmin(d2, axis=1)
-        return pd.DataFrame(
-            {"list_id": a.astype(np.int32), "pq_codes": list(out)}
-        )
-
-    return embeddings.select(
-        F.col(id_col), enc(F.col(vec_col)).alias("__e")
-    ).select(id_col, F.col("__e.list_id").alias("list_id"), F.col("__e.pq_codes").alias("pq_codes"))
+    return _pq_encode(embeddings, codebooks, id_col, vec_col, centroids, residual=True)
 
 
 def pq_encode(
@@ -676,26 +663,17 @@ def pq_encode(
     (nearest subspace centroid). 64-dim float corpus -> 8 ints/vector:
     a ~32x storage/shuffle compression. One Arrow-batched projection,
     codebooks in the closure."""
-    from pyspark.sql.functions import pandas_udf
+    return _pq_encode(embeddings, codebooks, id_col, vec_col)
 
-    B = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
 
-    @pandas_udf("array<int>")
-    def codes(vecs):
-        import pandas as pd
-
-        X = np.stack(vecs.to_numpy()).astype(np.float64)
-        X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        S = X.reshape(len(X), B.shape[0], -1)
-        out = np.empty((len(X), B.shape[0]), dtype=np.int32)
-        for j in range(B.shape[0]):
-            d2 = ((S[:, j, None, :] - B[j][None, :, :]) ** 2).sum(-1)
-            out[:, j] = np.argmin(d2, axis=1)
-        return pd.Series(list(out))
-
-    return embeddings.select(
-        F.col(id_col), codes(F.col(vec_col)).alias("pq_codes")
-    )
+def _query_matrix(queries: DataFrame, query_id_col: str, vec_col: str):
+    """Collect the query side (small by contract, like the broadcast in
+    :func:`cosine_topk`): ``(query ids, unit query matrix)``."""
+    rows = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    ).collect()
+    Q = np.stack([np.asarray(r["query_vec"], dtype=np.float64) for r in rows])
+    return [int(r["query_id"]) for r in rows], _unit(Q)
 
 
 def pq_topk(
@@ -729,19 +707,14 @@ def pq_topk(
 
     import pandas as pd
 
+    _check_ann(k, dim=dim, m=m)
     B = np.asarray(
         pq_codebooks(embeddings, m, ksub, iters, dim, id_col, vec_col),
         dtype=np.float64,
     )
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    ).collect()  # query side is small by contract (same as the broadcast in cosine_topk)
-    qids = np.asarray([r["query_id"] for r in qrows])
-    Q = np.stack([np.asarray(r["query_vec"], dtype=np.float64) for r in qrows])
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    qids, Q = _query_matrix(queries, query_id_col, vec_col)
     # LUT[q, j, c] = <query_q subvector j, codebook[j][c]>
-    Sq = Q.reshape(len(Q), m, -1)
-    LUT = np.einsum("qjd,jcd->qjc", Sq, B)
+    LUT = np.einsum("qjd,jcd->qjc", Q.reshape(len(Q), m, -1), B)
 
     encoded = pq_encode(ensure_parallelism(embeddings), B.tolist(), id_col, vec_col)
 
@@ -775,14 +748,10 @@ def pq_topk(
     local = encoded.mapInPandas(
         score, schema=f"query_id long, cand_id long, approx_cosine double"
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        local.withColumn("approx_cosine", F.round("approx_cosine", round_to))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "approx_cosine", "rank")
+    return _topk(
+        local.withColumn("approx_cosine", F.round("approx_cosine", round_to)),
+        "approx_cosine",
+        k,
     )
 
 
@@ -827,20 +796,14 @@ def ivfpq_topk(
 
     import pandas as pd
 
+    _check_ann(k, nlist, nprobe, dim, m)
     spark = embeddings.sparkSession
-    cents = np.asarray(
-        kmeans_centroids(embeddings, nlist, iters, id_col, vec_col)
-        if iters > 0
-        else [
-            r["v"]
-            for r in embeddings.orderBy(id_col)
-            .limit(nlist)
-            .select(F.col(vec_col).alias("v"))
-            .collect()
-        ],
-        dtype=np.float64,
+    cents = _unit(
+        np.asarray(
+            _coarse_centroids(embeddings, nlist, iters, id_col, vec_col),
+            dtype=np.float64,
+        )
     )
-    cents /= np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
     B = np.asarray(
         residual_codebooks(
             embeddings, cents.tolist(), m, ksub, iters, dim, id_col, vec_col
@@ -850,12 +813,7 @@ def ivfpq_topk(
         dtype=np.float64,
     )
 
-    qrows = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    ).collect()
-    qids = [int(r["query_id"]) for r in qrows]
-    Q = np.stack([np.asarray(r["query_vec"], dtype=np.float64) for r in qrows])
-    Q /= np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    qids, Q = _query_matrix(queries, query_id_col, vec_col)
     LUT = {qid: np.einsum("jd,jcd->jc", Q[i].reshape(m, -1), B) for i, qid in enumerate(qids)}
     # residual mode: <q, centroid> offsets, one scalar per (query, list)
     OFF = {qid: (Q[i] @ cents.T) for i, qid in enumerate(qids)} if residual else None
@@ -869,35 +827,20 @@ def ivfpq_topk(
         "query_id long, list_id int",
     )
 
-    C = cents
-
-    if residual:
-        # fused coarse-assign + residual-encode: one corpus pass
-        encoded = residual_encode(
-            ensure_parallelism(embeddings), C.tolist(), B.tolist(), id_col, vec_col
+    # fused coarse-assign + encode: one corpus pass, no join back on id
+    cand = (
+        _pq_encode(
+            ensure_parallelism(embeddings),
+            B.tolist(),
+            id_col,
+            vec_col,
+            cents.tolist(),
+            residual,
         )
-        cand = (
-            encoded.withColumnRenamed(id_col, "cand_id")
-            .join(F.broadcast(probes), "list_id")
-            .filter(F.col("cand_id") != F.col("query_id"))
-        )
-    else:
-
-        @pandas_udf("int")
-        def assign(vecs):
-            X = np.stack(vecs.to_numpy()).astype(np.float64)
-            X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            return pd.Series(np.argmax(X @ C.T, axis=1).astype(np.int32))
-
-        encoded = pq_encode(ensure_parallelism(embeddings), B.tolist(), id_col, vec_col)
-        cand = (
-            embeddings.select(
-                F.col(id_col).alias("cand_id"), assign(F.col(vec_col)).alias("list_id")
-            )
-            .join(encoded.withColumnRenamed(id_col, "cand_id"), "cand_id")
-            .join(F.broadcast(probes), "list_id")
-            .filter(F.col("cand_id") != F.col("query_id"))
-        )
+        .withColumnRenamed(id_col, "cand_id")
+        .join(F.broadcast(probes), "list_id")
+        .filter(F.col("cand_id") != F.col("query_id"))
+    )
 
     @pandas_udf("double")
     def adc(qid_s, list_s, codes_s):
@@ -924,14 +867,7 @@ def ivfpq_topk(
             "approx_cosine"
         ),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "approx_cosine", "rank")
-    )
+    return _topk(scored, "approx_cosine", k)
 
 
 def _portable_planes(dim: int, n_planes: int) -> list[list[float]]:
@@ -1206,6 +1142,37 @@ def _fp_quantize(vd, scale: int):
     return F.transform(vd, lambda x: F.floor(x / g * scale).cast("long"))
 
 
+def _fp_lattice(
+    df: DataFrame,
+    scale: int,
+    id_col: str,
+    vec_col: str,
+    id_as: str = "__id",
+    vec_as: str | None = None,
+) -> DataFrame:
+    """``(id_as, [vec_as,] __qv)``: each vector on the integer lattice
+    (``vec_as`` also keeps the raw vector)."""
+    keep = [vec_as] if vec_as else []
+    return df.select(
+        F.col(id_col).alias(id_as),
+        *[F.col(vec_col).alias(c) for c in keep],
+        to_double(F.col(vec_col)).alias("__vd"),
+    ).select(id_as, *keep, _fp_quantize(F.col("__vd"), scale).alias("__qv"))
+
+
+def _fp_fold(a: str, b: str, op: str) -> str:
+    """SQL text of the exact int64 fold ``sum_i op(a_i, b_i)`` over two
+    lattice arrays (``op`` over the lambda variables ``a``, ``b``):
+    integer and associative, so every engine lands on the same value."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (a, b) -> {op}),"
+        " cast(0 as bigint), (acc, x) -> acc + x)"
+    )
+
+
+_FP_L2 = "(a - b) * (a - b)"
+
+
 def _fp_argmin_expr(qv_sql: str, cents: list) -> "F.Column":
     """Nearest centroid by INTEGER squared L2 — a narrow projection
     (array_min over per-centroid fold structs), no join; ties break to
@@ -1221,11 +1188,8 @@ def _fp_argmin_expr(qv_sql: str, cents: list) -> "F.Column":
     (guide §7.3 driver-work class; expressions and values unchanged:
     bigint literals, same fold lambdas, same cast-pinned struct)."""
     structs = ", ".join(
-        "cast(struct(aggregate(zip_with({qv}, array({lits}),"
-        " (a, b) -> (a - b) * (a - b)), cast(0 as bigint),"
-        " (acc, x) -> acc + x), {cid}) as struct<dist:bigint,cid:int>)".format(
-            qv=qv_sql,
-            lits=", ".join(f"{int(c)}L" for c in vec),
+        "cast(struct({d}, {cid}) as struct<dist:bigint,cid:int>)".format(
+            d=_fp_fold(qv_sql, "array({})".format(", ".join(f"{int(c)}L" for c in vec)), _FP_L2),
             cid=int(cid),
         )
         for cid, vec in cents
@@ -1244,30 +1208,72 @@ def _fp_assign(qd, cents: list, qv_col: str = "__qv", out_col: str = "__list"):
     centroids as ONE broadcast row holding an array<struct<cid,cv>>
     and folds over it at runtime — no literal explosion, no shuffle,
     still a single narrow projection."""
+    q = "`" + qv_col.replace("`", "``") + "`"
     if len(cents) <= 32:
-        q = "`" + qv_col.replace("`", "``") + "`"
         return qd.withColumn(out_col, _fp_argmin_expr(q, cents))
     spark = qd.sparkSession
     cdf = spark.createDataFrame(
         [([(int(cid), [int(x) for x in vec]) for cid, vec in cents],)],
         "__cs array<struct<cid:int,cv:array<bigint>>>",
     )
-    qv = F.col(qv_col)
-    pairs = F.transform(
-        F.col("__cs"),
-        lambda s: F.struct(
-            F.aggregate(
-                F.zip_with(qv, s["cv"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ),
-            s["cid"],
-        ).cast("struct<dist:bigint,cid:int>"),
+    nearest = F.expr(
+        "array_min(transform(__cs, s -> cast(struct({d}, s.cid)"
+        " as struct<dist:bigint,cid:int>))).cid".format(d=_fp_fold(q, "s.cv", _FP_L2))
     )
     return (
         qd.crossJoin(F.broadcast(cdf))
-        .withColumn(out_col, F.array_min(pairs)["cid"])
+        .withColumn(out_col, nearest)
         .drop("__cs")
+    )
+
+
+def _fp_codes(books: list, dsub: int) -> "F.Column":
+    """The PQ codes of ``__qv``: per subspace j, the integer-L2 argmin
+    of its ``dsub``-slice against ``books[j]`` (ties -> lowest code)."""
+    return F.array(
+        *[
+            _fp_argmin_expr(f"slice(__qv, {j * dsub + 1}, {dsub})", list(enumerate(book)))
+            for j, book in enumerate(books)
+        ]
+    )
+
+
+def _fp_cents_df(spark, cents: list) -> DataFrame:
+    return spark.createDataFrame(
+        [(cid, [int(x) for x in vec]) for cid, vec in cents],
+        "cent_id int, cv array<bigint>",
+    )
+
+
+def _fp_probes(q: DataFrame, cents_df: DataFrame, nprobe: int, *cols) -> DataFrame:
+    """Each query's ``nprobe`` nearest lists by exact integer L2 (ties ->
+    lowest list id): ``(*cols, list_id)``, where ``cols`` may read the
+    query's ``__qv`` and the list centroid ``cv``."""
+    w = W.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("cent_id").asc())
+    return (
+        q.join(F.broadcast(cents_df), how="cross")
+        .withColumn("__d", F.expr(_fp_fold("__qv", "cv", _FP_L2)))
+        .withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") <= nprobe)
+        .select(*cols, F.col("cent_id").alias("list_id"))
+    )
+
+
+def _fp_lut(q: DataFrame, books: list, dsub: int) -> DataFrame:
+    """The integer ADC table ``(query_id, j, code, t)``: ``t`` = the
+    int64 dot of the query's subvector j with ``books[j][code]``, for
+    every query, subspace and code (broadcast-sized)."""
+    books_df = q.sparkSession.createDataFrame(
+        [
+            (j, c, [int(x) for x in vec])
+            for j, book in enumerate(books)
+            for c, vec in enumerate(book)
+        ],
+        "j int, code int, cv array<bigint>",
+    )
+    t = F.expr(_fp_fold(f"slice(__qv, j * {dsub} + 1, {dsub})", "cv", "a * b"))
+    return q.join(F.broadcast(books_df), how="cross").select(
+        "query_id", "j", "code", t.alias("t")
     )
 
 
@@ -1302,9 +1308,7 @@ def kmeans_centroids_fixedpoint(
     # of integer fold work, which serialized on a single scan task
     # (measured 1.7 s/iter at 2k rows); round-robin repartition spreads
     # it across every core and is a no-op on wide cluster scans
-    qd = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("__id"), to_double(F.col(vec_col)).alias("__vd")
-    ).select("__id", _fp_quantize(F.col("__vd"), scale).alias("__qv"))
+    qd = _fp_lattice(ensure_parallelism(embeddings), scale, id_col, vec_col)
     # iterative training re-reads qd once per Lloyd round (+ the init
     # job): persist regardless of size — the classic iterative-ML cache
     # case, NOT a multi-consumer plan exchange reuse could dedupe
@@ -1352,37 +1356,15 @@ def ivf_topk_fixedpoint(
     for cross-engine parity). Same plan shape as :func:`ivf_topk`;
     this variant trades the spherical metric for full
     SQL-replayability of the training loop."""
-    spark = embeddings.sparkSession
+    _check_ann(k, nlist, nprobe)
     cents = kmeans_centroids_fixedpoint(
         embeddings, nlist, iters, scale, id_col, vec_col
     )
-    e = embeddings.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cand_vec")
-    )
-    assigned = (
-        e.withColumn("__qv", _fp_quantize(to_double(F.col("cand_vec")), scale))
-        .withColumn("list_id", _fp_argmin_expr("__qv", cents))
-        .drop("__qv")
-    )
-    cents_df = spark.createDataFrame(
-        [(cid, [int(x) for x in vec]) for cid, vec in cents],
-        "cent_id int, cv array<bigint>",
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    ).withColumn("__qv", _fp_quantize(to_double(F.col("query_vec")), scale))
-    idist = F.aggregate(
-        F.zip_with(F.col("__qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("cent_id").asc())
-    probes = (
-        q.join(F.broadcast(cents_df), how="cross")
-        .withColumn("__d", idist)
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= nprobe)
-        .select("query_id", "query_vec", F.col("cent_id").alias("list_id"))
+    e = _fp_lattice(embeddings, scale, id_col, vec_col, "cand_id", "cand_vec")
+    assigned = _fp_assign(e, cents, out_col="list_id").drop("__qv")
+    q = _fp_lattice(queries, scale, query_id_col, vec_col, "query_id", "query_vec")
+    probes = _fp_probes(
+        q, _fp_cents_df(embeddings.sparkSession, cents), nprobe, "query_id", "query_vec"
     )
     sim = F.round(cosine(F.col("cand_vec"), F.col("query_vec")), round_to)
     scored = (
@@ -1390,13 +1372,7 @@ def ivf_topk_fixedpoint(
         .filter(F.col("cand_id") != F.col("query_id"))
         .withColumn("cosine", sim)
     )
-    wk = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-        .dropDuplicates(["query_id", "cand_id"])
-    )
+    return _topk(scored, "cosine", k).dropDuplicates(["query_id", "cand_id"])
 
 
 def pq_codebooks_fixedpoint(
@@ -1419,14 +1395,9 @@ def pq_codebooks_fixedpoint(
     round: ONE scan computes every subspace's assignment codes and one
     posexplode + groupBy yields all (subspace, code, dim) integer
     sums. Returns [m][ksub][dsub] ints."""
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    qd = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("__id"), to_double(F.col(vec_col)).alias("__vd")
-    ).select("__id", _fp_quantize(F.col("__vd"), scale).alias("__qv"))
-    qd = maybe_persist(qd)
-    return _pq_train_fp(qd, m, ksub, iters, dsub)
+    _check_ann(dim=dim, m=m)
+    qd = _fp_lattice(ensure_parallelism(embeddings), scale, id_col, vec_col)
+    return _pq_train_fp(qd, m, ksub, iters, dim // m)
 
 
 def _pq_train_fp(qd: DataFrame, m: int, ksub: int, iters: int, dsub: int) -> list:
@@ -1447,17 +1418,9 @@ def _pq_train_fp(qd: DataFrame, m: int, ksub: int, iters: int, dsub: int) -> lis
         for j in range(m)
     ]
     for _ in range(iters):
-        codes = F.array(
-            *[
-                _fp_argmin_expr(
-                    f"slice(__qv, {j * dsub + 1}, {dsub})",
-                    list(enumerate(books[j])),
-                )
-                for j in range(m)
-            ]
-        )
         exploded = qd.select(
-            codes.alias("__codes"), F.posexplode("__qv").alias("__pos", "__qi")
+            _fp_codes(books, dsub).alias("__codes"),
+            F.posexplode("__qv").alias("__pos", "__qi"),
         ).select(
             (F.col("__pos") / dsub).cast("int").alias("j"),
             F.element_at(
@@ -1504,52 +1467,17 @@ def pq_topk_fixedpoint(
     one groupBy(query, cand) integer sum scores everything. At corpus
     scale that is a broadcast join + one shuffle keyed on
     (query, cand) with map-side combine."""
-    spark = embeddings.sparkSession
+    _check_ann(k, dim=dim, m=m)
     dsub = dim // m
     books = pq_codebooks_fixedpoint(
         embeddings, m, ksub, iters, scale, dim, id_col, vec_col
     )
-    codes_expr = F.array(
-        *[
-            _fp_argmin_expr(
-                f"slice(__qv, {j * dsub + 1}, {dsub})",
-                list(enumerate(books[j])),
-            )
-            for j in range(m)
-        ]
+    enc = _fp_lattice(embeddings, scale, id_col, vec_col, "cand_id").select(
+        "cand_id", F.posexplode(_fp_codes(books, dsub)).alias("j", "code")
     )
-    enc = (
-        embeddings.select(
-            F.col(id_col).alias("cand_id"), to_double(F.col(vec_col)).alias("__vd")
-        )
-        .select("cand_id", _fp_quantize(F.col("__vd"), scale).alias("__qv"))
-        .select("cand_id", F.posexplode(codes_expr).alias("j", "code"))
-    )
-    books_df = spark.createDataFrame(
-        [
-            (j, c, [int(x) for x in books[j][c]])
-            for j in range(m)
-            for c in range(ksub)
-        ],
-        "j int, code int, cv array<bigint>",
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), to_double(F.col(vec_col)).alias("__vd")
-    ).select("query_id", _fp_quantize(F.col("__vd"), scale).alias("__qv"))
-    term = F.aggregate(
-        F.zip_with(
-            F.slice(F.col("__qv"), F.col("j") * dsub + 1, dsub),
-            F.col("cv"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    lut = q.join(F.broadcast(books_df), how="cross").select(
-        "query_id", "j", "code", term.alias("t")
-    )
+    q = _fp_lattice(queries, scale, query_id_col, vec_col, "query_id")
     scored = (
-        enc.join(F.broadcast(lut), ["j", "code"])
+        enc.join(F.broadcast(_fp_lut(q, books, dsub)), ["j", "code"])
         .filter(F.col("cand_id") != F.col("query_id"))
         .groupBy("query_id", "cand_id")
         .agg(F.sum("t").alias("s"))
@@ -1557,14 +1485,7 @@ def pq_topk_fixedpoint(
             "adc_score", F.round(F.col("s") / F.lit(float(scale) ** 2), round_to)
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "adc_score", "rank")
-    )
+    return _topk(scored, "adc_score", k)
 
 
 def ivfpq_topk_fixedpoint(
@@ -1598,21 +1519,13 @@ def ivfpq_topk_fixedpoint(
     offset table and a broadcast (query, subspace, code) LUT, then one
     keyed integer aggregation — broadcast joins + one shuffle with
     map-side combine."""
-    spark = embeddings.sparkSession
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
+    _check_ann(k, nlist, nprobe, dim, m)
     dsub = dim // m
     cents = kmeans_centroids_fixedpoint(
         embeddings, nlist, iters, scale, id_col, vec_col
     )
-    cents_df = spark.createDataFrame(
-        [(cid, [int(x) for x in vec]) for cid, vec in cents],
-        "cent_id int, cv array<bigint>",
-    )
-    qd = embeddings.select(
-        F.col(id_col).alias("__id"), to_double(F.col(vec_col)).alias("__vd")
-    ).select("__id", _fp_quantize(F.col("__vd"), scale).alias("__qv"))
-    assigned = qd.withColumn("__list", _fp_argmin_expr("__qv", cents))
+    cents_df = _fp_cents_df(embeddings.sparkSession, cents)
+    assigned = _fp_assign(_fp_lattice(embeddings, scale, id_col, vec_col), cents)
     resid = maybe_persist(
         assigned.join(
             F.broadcast(cents_df), assigned["__list"] == cents_df["cent_id"]
@@ -1623,68 +1536,17 @@ def ivfpq_topk_fixedpoint(
         )
     )
     books = _pq_train_fp(resid.select("__id", "__qv"), m, ksub, iters, dsub)
-    codes_expr = F.array(
-        *[
-            _fp_argmin_expr(
-                f"slice(__qv, {j * dsub + 1}, {dsub})",
-                list(enumerate(books[j])),
-            )
-            for j in range(m)
-        ]
-    )
     enc = resid.select(
         F.col("__id").alias("cand_id"),
         "list_id",
-        F.posexplode(codes_expr).alias("j", "code"),
+        F.posexplode(_fp_codes(books, dsub)).alias("j", "code"),
     )
-    books_df = spark.createDataFrame(
-        [
-            (j, c, [int(x) for x in books[j][c]])
-            for j in range(m)
-            for c in range(ksub)
-        ],
-        "j int, code int, cv array<bigint>",
-    )
-    qn = queries.select(
-        F.col(query_id_col).alias("query_id"), to_double(F.col(vec_col)).alias("__vd")
-    ).select("query_id", _fp_quantize(F.col("__vd"), scale).alias("__qv"))
-    idot = F.aggregate(
-        F.zip_with(F.col("__qv"), F.col("cv"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    idist = F.aggregate(
-        F.zip_with(F.col("__qv"), F.col("cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("__d").asc(), F.col("cent_id").asc())
-    probes = (
-        qn.join(F.broadcast(cents_df), how="cross")
-        .withColumn("__d", idist)
-        .withColumn("__off", idot)
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= nprobe)
-        .select(
-            "query_id", F.col("cent_id").alias("list_id"), F.col("__off").alias("off")
-        )
-    )
-    term = F.aggregate(
-        F.zip_with(
-            F.slice(F.col("__qv"), F.col("j") * dsub + 1, dsub),
-            F.col("cv"),
-            lambda a, b: a * b,
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    lut = qn.join(F.broadcast(books_df), how="cross").select(
-        "query_id", "j", "code", term.alias("t")
-    )
+    qn = _fp_lattice(queries, scale, query_id_col, vec_col, "query_id")
+    off = F.expr(_fp_fold("__qv", "cv", "a * b")).alias("off")
     scored = (
-        enc.join(F.broadcast(probes), "list_id")
+        enc.join(F.broadcast(_fp_probes(qn, cents_df, nprobe, "query_id", off)), "list_id")
         .filter(F.col("cand_id") != F.col("query_id"))
-        .join(F.broadcast(lut), ["query_id", "j", "code"])
+        .join(F.broadcast(_fp_lut(qn, books, dsub)), ["query_id", "j", "code"])
         .groupBy("query_id", "cand_id", "off")
         .agg(F.sum("t").alias("s"))
         .withColumn(
@@ -1694,14 +1556,7 @@ def ivfpq_topk_fixedpoint(
             ),
         )
     )
-    wk = W.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "adc_score", "rank")
-    )
+    return _topk(scored, "adc_score", k)
 
 
 def semantic_dedup_fixedpoint(
@@ -1760,9 +1615,7 @@ def semantic_dedup_fixedpoint(
     cents = kmeans_centroids_fixedpoint(
         embeddings, nlist, iters, scale, id_col, vec_col
     )
-    qd = ensure_parallelism(embeddings).select(
-        F.col(id_col).alias("__id"), to_double(F.col(vec_col)).alias("__vd")
-    ).select("__id", _fp_quantize(F.col("__vd"), scale).alias("__qv"))
+    qd = _fp_lattice(ensure_parallelism(embeddings), scale, id_col, vec_col)
     asg = maybe_persist(_fp_assign(qd, cents, out_col="cluster_id"))
     pair_keys = ["cluster_id"]
     if max_cluster_size is not None:
@@ -1793,11 +1646,7 @@ def semantic_dedup_fixedpoint(
     b = asg.select(
         F.col("__id").alias("b_id"), *pair_keys, F.col("__qv").alias("vb")
     )
-    s = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    s = F.expr(_fp_fold("va", "vb", "a * b"))
     best = (
         a.join(b, pair_keys)
         .filter(F.col("b_id") < F.col("a_id"))
@@ -1842,12 +1691,7 @@ def hard_negatives(
     outgrows brute force, :func:`hard_negatives_ivf` is the same miner
     over IVF probing (touches ~nprobe/nlist of the corpus per query).
     """
-    from pyspark.sql import Window as W
-
-    from multi_sensor_data_pipeline_for_robotics__spark.functions.vector import (
-        cosine,
-    )
-
+    _check_ann(k)
     e = embeddings.select(
         F.col(id_col).alias("cand_id"),
         F.col(vec_col).alias("cand_vec"),
@@ -1865,14 +1709,7 @@ def hard_negatives(
     ).withColumn(
         "cosine", F.round(cosine(F.col("cand_vec"), F.col("query_vec")), round_to)
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _topk(scored, "cosine", k)
 
 
 def hard_negatives_ivf(
@@ -1949,11 +1786,11 @@ def diverse_prototypes(
     embeddings = embeddings.filter(
         l2_norm(to_double(F.col(vec_col))) > 0
     )
-    cent_rows = _first_n_centroids(embeddings, nlist, id_col, vec_col)
+    cent_rows = list(enumerate(_first_n(embeddings, nlist, id_col, vec_col)))
     vd = to_double(F.col(vec_col))
     vn = l2_norm(vd)
     # the SAME quantizer as ivf_topk — literally: the shared
-    # _first_n_centroids collect and _assign_pairs argmax projection,
+    # _first_n collect and _assign_pairs argmax projection,
     # keeping the winning struct so the sim rides along
     best = F.array_max(_assign_pairs(cent_rows, vd, vn))
     assigned = embeddings.select(

@@ -1037,6 +1037,165 @@ def test_residual_encode_shapes_and_determinism(spark):
     assert all(0 <= r.list_id < 8 for r in enc)
 
 
+def _ivfpq_adc_reference(X, qidx, cents, books, nprobe, k, residual):
+    """Plain numpy IVFPQ: unit vectors, coarse lists by argmax cosine,
+    PQ codes by per-subspace argmin L2 (of x or of x - c(x)), the
+    ``nprobe`` best lists per query, ADC = sum of LUT entries (+ the
+    <q, centroid> offset in residual mode), round 6, then
+    (score desc, id asc) top-k without the query itself."""
+
+    def unit(A):
+        return A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
+
+    C, B = unit(np.asarray(cents)), np.asarray(books)
+    m = len(B)
+    U = unit(X)
+    lists = np.argmax(U @ C.T, axis=1)
+    S = (U - C[lists] if residual else U).reshape(len(U), m, -1)
+    codes = np.stack(
+        [np.argmin(((S[:, j, None, :] - B[j][None]) ** 2).sum(-1), axis=1) for j in range(m)],
+        axis=1,
+    )
+    out = []
+    for qi in qidx:
+        sims = U[qi] @ C.T
+        probed = set(np.argsort(-sims, kind="stable")[:nprobe].tolist())
+        cand = [i for i in range(len(U)) if i != qi and lists[i] in probed]
+        lut = np.einsum("jd,jcd->jc", U[qi].reshape(m, -1), B)
+        s = np.zeros(len(cand))
+        for j in range(m):
+            s += lut[j, codes[cand, j]]
+        if residual:
+            s += sims[lists[cand]]
+        ranked = sorted(zip(cand, np.round(s, 6)), key=lambda t: (-t[1], t[0]))[:k]
+        out += [(qi, c, float(v), r + 1) for r, (c, v) in enumerate(ranked)]
+    return sorted(out)
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_ivfpq_matches_numpy_adc_reference(spark, residual):
+    """``ivfpq_topk`` values against a numpy reference built from the
+    public trainers' outputs: probe selection, ADC scores and the
+    (score desc, id asc) top-k must agree exactly. The clusters overlap
+    (sigma 1.5), so each query's top-k spans several coarse lists and
+    probing one list fewer changes the result."""
+    nlist, nprobe, m, ksub, iters, dim, k = 6, 2, 4, 8, 2, 16, 5
+    rng = np.random.default_rng(3)
+    X = rng.standard_normal((12, dim))[np.arange(240) % 12]
+    X += 1.5 * rng.standard_normal(X.shape)
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
+        "vec_id long, embedding array<double>",
+    )
+    qs = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    cents = SIM.kmeans_centroids(emb, nlist=nlist, iters=iters)
+    unit = np.asarray(cents) / np.linalg.norm(np.asarray(cents), axis=1, keepdims=True)
+    books = (
+        SIM.residual_codebooks(emb, unit.tolist(), m=m, ksub=ksub, iters=iters, dim=dim)
+        if residual
+        else SIM.pq_codebooks(emb, m=m, ksub=ksub, iters=iters, dim=dim)
+    )
+    want = _ivfpq_adc_reference(X, range(8), cents, books, nprobe, k, residual)
+    got = SIM.ivfpq_topk(
+        emb, qs, k=k, nlist=nlist, nprobe=nprobe, m=m, ksub=ksub, iters=iters,
+        dim=dim, residual=residual,
+    ).collect()
+    assert sorted(
+        (r.query_id, r.cand_id, r.approx_cosine, r.rank) for r in got
+    ) == want
+
+
+def test_fp_assign_broadcast_path_matches_literal_path(spark):
+    """40 centroids take ``_fp_assign``'s broadcast path; it must equal
+    the literal ``_fp_argmin_expr`` projection row for row, including
+    exact distance ties, which go to the lowest cent_id."""
+    # a 7 x 6 grid at spacing 10 (ids 0..39), listed high id first so
+    # the tie rule cannot lean on list order; 39 duplicates 5
+    cents = [(c, [10 * (c % 7), 10 * (c // 7), 0, 0]) for c in range(39, -1, -1)]
+    cents[0] = (39, [50, 0, 0, 0])
+    rng = np.random.default_rng(9)
+    pts = [
+        [50, 0, 0, 0],  # on 5 and its duplicate 39 -> 5
+        [5, 0, 0, 0],  # midway 0 | 1 -> 0
+        [15, 10, 0, 0],  # midway 8 | 9 -> 8
+        [5, 5, 0, 0],  # four-way 0 | 1 | 7 | 8 -> 0
+        [25, 45, 3, -3],  # four-way 30 | 31 | 37 | 38 -> 30
+    ] + rng.integers(-10, 70, (40, 4)).tolist()
+    qd = spark.createDataFrame(
+        [(i, [int(x) for x in v]) for i, v in enumerate(pts)],
+        "__id long, __qv array<bigint>",
+    )
+
+    def pairs(df):
+        return sorted((r["__id"], r["__list"]) for r in df.collect())
+
+    got = pairs(SIM._fp_assign(qd, cents))
+    assert got == pairs(qd.withColumn("__list", SIM._fp_argmin_expr("__qv", cents)))
+    want = [
+        (i, min((sum((a - b) ** 2 for a, b in zip(v, cv)), c) for c, cv in cents)[1])
+        for i, v in enumerate(pts)
+    ]
+    assert got == want
+    assert [c for _, c in got[:5]] == [5, 0, 8, 0, 30]
+
+
+def _ann_frames(spark):
+    rows = [(i, [float((i * 7 + d) % 5) for d in range(64)], i % 2) for i in range(20)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
+    qs = emb.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), "embedding", "label"
+    )
+    return emb, qs
+
+
+_BAD_ANN_CALLS = {
+    "cosine_k0": (lambda e, q: SIM.cosine_topk(e, q, k=0), "k must be"),
+    "ivf_k0": (lambda e, q: SIM.ivf_topk(e, q, k=0), "k must be"),
+    "ivf_nlist0": (lambda e, q: SIM.ivf_topk(e, q, nlist=0), "nlist must be"),
+    "ivf_nprobe0": (lambda e, q: SIM.ivf_topk(e, q, nprobe=0), "nprobe must be"),
+    "pq_k0": (lambda e, q: SIM.pq_topk(e, q, k=0), "k must be"),
+    "pq_m7": (lambda e, q: SIM.pq_topk(e, q, m=7), "divisible"),
+    "ivfpq_m7": (lambda e, q: SIM.ivfpq_topk(e, q, m=7), "divisible"),
+    "ivfpq_nprobe0": (lambda e, q: SIM.ivfpq_topk(e, q, nprobe=0), "nprobe must be"),
+    "ivf_fp_nlist0": (
+        lambda e, q: SIM.ivf_topk_fixedpoint(e, q, nlist=0), "nlist must be"
+    ),
+    "pq_fp_k0": (lambda e, q: SIM.pq_topk_fixedpoint(e, q, k=0), "k must be"),
+    "pq_fp_m0": (lambda e, q: SIM.pq_topk_fixedpoint(e, q, m=0), "divisible"),
+    "ivfpq_fp_m7": (lambda e, q: SIM.ivfpq_topk_fixedpoint(e, q, m=7), "divisible"),
+    "ivfpq_fp_k_neg": (
+        lambda e, q: SIM.ivfpq_topk_fixedpoint(e, q, k=-1), "k must be"
+    ),
+    "hard_neg_k0": (lambda e, q: SIM.hard_negatives(e, q, k=0), "k must be"),
+    "hard_neg_ivf_nprobe0": (
+        lambda e, q: SIM.hard_negatives_ivf(e, q, nprobe=0), "nprobe must be"
+    ),
+    "pq_codebooks_m7": (lambda e, q: SIM.pq_codebooks(e, m=7), "divisible"),
+    "residual_codebooks_m7": (
+        lambda e, q: SIM.residual_codebooks(e, [[1.0] * 64], m=7), "divisible"
+    ),
+    "pq_codebooks_fp_m7": (
+        lambda e, q: SIM.pq_codebooks_fixedpoint(e, m=7), "divisible"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_ANN_CALLS))
+def test_bad_ann_args_raise_before_any_spark_job(spark, case):
+    """Bad k / nlist / nprobe / m arguments of the embedding and ANN
+    operators are a ValueError raised before the first Spark job (not
+    an empty result, nor an error after minutes of training)."""
+    emb, qs = _ann_frames(spark)
+    call, match = _BAD_ANN_CALLS[case]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match=match):
+        call(emb, qs)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_corpus_clean_pipeline_stages_monotonic(spark, sf_dir):
     from multi_sensor_data_pipeline_for_robotics__spark.plans.corpus import (
         corpus_clean_pipeline,

@@ -14,28 +14,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE
 from multi_sensor_data_pipeline_for_robotics__spark import get_session
-
-HEADLINE = [
-    "o15_sync_wide",
-    "o14_asof_nearest",
-    "o16_event_onehot",
-    "o10_quantile_clamp",
-    "o20_corr_matrix",
-    "o21_summary_stats",
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q_window_running",
-    "q_rollup_revenue",
-    "join_enrich_events",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "text_token_stats",
-    "text_bpe_tokens",
-    "embed_cosine_topk",
-    "embed_neardup_lsh",
-]
 
 
 def main() -> None:
