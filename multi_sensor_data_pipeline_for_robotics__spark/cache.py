@@ -144,32 +144,16 @@ def auto_random_buckets(df: DataFrame, bytes_per_row: int = 512) -> int:
     return max(est_n // 2, 16)
 
 
-def persist_gate_bytes() -> int:
-    """The size gate, honoring the SPARK_GRAFT_PERSIST_MIN_BYTES
-    override."""
-    return int(
-        os.environ.get("SPARK_GRAFT_PERSIST_MIN_BYTES", DEFAULT_PERSIST_MIN_BYTES)
-    )
-
-
 def maybe_persist(df: DataFrame, min_bytes: int | None = None) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK — keeps lineage, executor loss
     degrades to recompute) iff its upstream looks big enough to be worth
-    the barrier.
-
-    Env overrides for A/B benchmarking:
-      SPARK_GRAFT_NO_PERSIST=1     never persist
-      SPARK_GRAFT_FORCE_PERSIST=1  always persist
-      SPARK_GRAFT_PERSIST_MIN_BYTES=<n>  override the size gate
+    the barrier: an unknown estimate, or one of at least ``min_bytes``
+    (default :data:`DEFAULT_PERSIST_MIN_BYTES`).
     """
-    if os.environ.get("SPARK_GRAFT_NO_PERSIST") == "1":
-        return df
     from pyspark.storagelevel import StorageLevel
 
-    if os.environ.get("SPARK_GRAFT_FORCE_PERSIST") == "1":
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
     if min_bytes is None:
-        min_bytes = persist_gate_bytes()
+        min_bytes = DEFAULT_PERSIST_MIN_BYTES
     est = estimated_source_bytes(df)
     if est is None or est >= min_bytes:
         return df.persist(StorageLevel.MEMORY_AND_DISK)

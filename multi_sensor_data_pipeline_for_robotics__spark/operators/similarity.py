@@ -1312,8 +1312,7 @@ def kmeans_centroids_fixedpoint(
     # iterative training re-reads qd once per Lloyd round (+ the init
     # job): persist regardless of size — the classic iterative-ML cache
     # case, NOT a multi-consumer plan exchange reuse could dedupe
-    # (min_bytes=0 keeps the SPARK_GRAFT_NO_PERSIST A/B knob honored;
-    # at 100 TB the intended training input is a sample, per docstring)
+    # (at 100 TB the intended training input is a sample, per docstring)
     qd = maybe_persist(qd, min_bytes=0)
     init = qd.orderBy("__id").limit(nlist).select("__qv").collect()
     cents = [(i, [int(x) for x in r["__qv"]]) for i, r in enumerate(init)]

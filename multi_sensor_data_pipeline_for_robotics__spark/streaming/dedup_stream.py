@@ -97,16 +97,16 @@ def stream_corpus_screen_to_parquet(
     the static side is pinned at query start — restart to pick up a
     refreshed signature table.
 
-    Exactly-once landing: foreachBatch is at-least-once, so a plain
-    append would duplicate survivors when a failed micro-batch retries.
-    Survivors land PARTITIONED BY the epoch id with dynamic partition
-    overwrite — a retry of epoch N rewrites only ``epoch_id=N``,
-    making the sink idempotent (the standard parquet-sink recipe;
-    transactional table formats do this natively). Readers see an extra
+    Exactly-once landing: survivors land through the idempotent
+    epoch-partitioned sink (``streaming.epoch_sink``) — a retry of
+    epoch N rewrites only ``epoch_id=N``. Readers see an extra
     ``epoch_id`` partition column.
     """
     from multi_sensor_data_pipeline_for_robotics__spark.operators.dedup import (
         dedup_against_corpus,
+    )
+    from multi_sensor_data_pipeline_for_robotics__spark.streaming.epoch_sink import (
+        write_epoch,
     )
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -120,13 +120,7 @@ def stream_corpus_screen_to_parquet(
             id_col=id_col,
             shingle_n=shingle_n,
         )
-        (
-            kept.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
+        write_epoch(kept, out_path, epoch_id)
 
     return (
         stream.writeStream.foreachBatch(write_batch)
@@ -198,6 +192,10 @@ def stream_components_maintain_to_parquet(
         _portable_sig_fn,
         components_merge,
     )
+    from multi_sensor_data_pipeline_for_robotics__spark.streaming.epoch_sink import (
+        read_epochs_before,
+        write_epoch,
+    )
 
     _check_bands(num_hashes, bands)
     sig_fn = _portable_sig_fn(hash_family)
@@ -207,14 +205,6 @@ def stream_components_maintain_to_parquet(
     sig_schema = ", ".join(["doc long"] + [f"{h} long" for h in hcols])
     labels_schema = "doc_id long, component long"
 
-    def _exists(spark: SparkSession, path: str) -> bool:
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(
-            spark.sparkContext._jsc.hadoopConfiguration()
-        )
-        return fs.exists(hpath)
-
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         nsig = sig_fn(
@@ -223,14 +213,9 @@ def stream_components_maintain_to_parquet(
         new_ids = batch_df.select(F.col(id_col).alias("doc_id")).distinct()
         if not new_ids.limit(1).count():
             return
-        stored = None
-        if _exists(spark, sigs_path):
-            stored = (
-                spark.read.schema(sig_schema + ", epoch_id int")
-                .parquet(sigs_path)
-                .filter(F.col("epoch_id") < int(epoch_id))
-                .drop("epoch_id")
-            )
+        stored = read_epochs_before(spark, sigs_path, sig_schema, epoch_id)
+        if stored is not None:
+            stored = stored.drop("epoch_id")
         if init_signatures is not None:
             init_s = init_signatures.select("doc", *hcols)
             stored = init_s if stored is None else stored.unionByName(init_s)
@@ -253,15 +238,9 @@ def stream_components_maintain_to_parquet(
             .dropDuplicates(["doc_a", "doc_b"])
         )
         prior = None
-        if _exists(spark, labels_path):
-            snap = spark.read.schema(labels_schema + ", epoch_id int").parquet(
-                labels_path
-            )
-            last = (
-                snap.filter(F.col("epoch_id") < int(epoch_id))
-                .agg(F.max("epoch_id"))
-                .first()[0]
-            )
+        snap = read_epochs_before(spark, labels_path, labels_schema, epoch_id)
+        if snap is not None:
+            last = snap.agg(F.max("epoch_id")).first()[0]
             if last is not None:
                 prior = snap.filter(F.col("epoch_id") == last).drop("epoch_id")
         if prior is None:
@@ -273,20 +252,8 @@ def stream_components_maintain_to_parquet(
         labels = components_merge(
             prior, pairs.select("doc_a", "doc_b"), new_nodes=new_ids
         )
-        (
-            labels.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(labels_path)
-        )
-        (
-            nsig.withColumn("epoch_id", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(sigs_path)
-        )
+        write_epoch(labels, labels_path, epoch_id)
+        write_epoch(nsig, sigs_path, epoch_id)
 
     return (
         stream.writeStream.foreachBatch(write_batch)

@@ -1,25 +1,36 @@
-"""Custom stateful streaming operators via ``applyInPandasWithState``.
+"""Stateful streaming twins of batch operators, via Spark's
+arbitrary-stateful-processing API (``applyInPandasWithState``).
 
-The batch as-of align (operators/sync.py) carries the last observation
-across time-bucket boundaries with a broadcast carry table; on a stream
-the same "remember the last observation" semantics needs REAL state —
-this module implements it with Spark's arbitrary-stateful-processing API:
+  operator                 batch twin                           state per key
+  locf_enrich              lag() per key (as-of pad alignment)  last (ts, value)
+  ewma_stream              timeseries.ewma                      last W-1 values + count
+  kmv_stream               sketch.kmv_distinct                  k smallest hashes
+  hist_stream              sketch.histogram_quantiles           (bin, count) pairs
+  cms_stream               freq.cms_sketch + cms_estimate       (depth, width, count)
+  drift_stream             drift.histogram_drift                hist_stream's bins
+  heavy_hitters_stream     freq.heavy_hitters                   (value, count) table
+  top_k_frequent_stream    freq.top_k_frequent                  heavy_hitters' table
+  user_features_stream     stats.user_activity_features         5 counters + types
+  benford_stream           assoc.benford_audit                  9 digit counters
+  sequence_stream          sequence.match_sequence              last len(pattern)-1
+  mixture_stream           group count per source               one row counter
+  token_budget_stream      selection.dsir_select_token_budget   tokens admitted
+  token_budget_stream_to_parquet  the same, multi-task          sidecar totals table
 
-  ``locf_enrich``  per key, every record is emitted with the value of the
-                   previous observation (last-observation-carried-forward
-                   across micro-batches). This is the streaming primitive
-                   under pad-alignment: state = one (ts, value) pair per
-                   key, O(keys) total, independent of stream length.
+Every operator but the last is one keyed ``applyInPandasWithState``
+call (:func:`_keyed_state`). The nine summary twins (kmv to mixture,
+sequence excluded) share one loop (:func:`_summary_stream`): each
+micro-batch folds its rows into the key's summary and re-emits the
+summary's readout stamped with a monotone ``batch_seq``; the rows with
+the highest ``batch_seq`` per key equal the batch twin over the same
+rows. The other four emit per-row output.
 
-Scale notes: state lives in the state store, partitioned by key —
-adding executors shards it. Per key the state is ~16 bytes; watermark-
-based timeout (``GroupStateTimeout``) can expire idle keys when the key
-space is unbounded (not enabled here — sensor channels are a small fixed
-key set).
-
-Within a micro-batch rows are processed in event-time order (sorted per
-batch); records older than the carried state's timestamp are late data —
-they still get the then-current previous value and do NOT rewind state.
+State lives in the state store, partitioned by key — adding executors
+shards it. No timeout is set (``GroupStateTimeout.NoTimeout``): a key's
+state lives as long as the query. Within a micro-batch rows are
+processed in event-time order where order matters; a record older than
+the carried state is late data — it still gets the then-current state
+and does NOT rewind it.
 """
 
 from __future__ import annotations
@@ -30,7 +41,83 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+
+def _keyed(stream: DataFrame, key_col: str, *cols) -> DataFrame:
+    """``stream`` projected to a string ``key`` column plus ``cols``."""
+    return stream.select(F.col(key_col).cast("string").alias("key"), *cols)
+
+
+def _keyed_state(
+    keyed: DataFrame, fn, output_schema: str, state_schema: str, key: str = "key"
+) -> DataFrame:
+    """Group ``keyed`` by ``key`` and run ``fn(key, pdfs, state)`` on
+    each group with arbitrary state, in append mode with no timeout."""
+    return keyed.groupBy(key).applyInPandasWithState(
+        fn,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _summary_stream(
+    keyed: DataFrame,
+    output_schema: str,
+    state_schema: str,
+    load,
+    merge,
+    dump,
+    readout,
+    key: str = "key",
+) -> DataFrame:
+    """The cumulative-summary loop of the nine summary twins.
+
+    Per key and micro-batch: ``load(*fields)`` the summary from the
+    state fields (``load()``, the empty summary, when the key has no
+    state yet), fold each pandas chunk in with ``summary =
+    merge(summary, pdf)``, store ``dump(summary)`` back with the
+    incremented seq, and emit ``readout(summary)`` — output columns as
+    equal-length lists — stamped with the key and that seq as
+    ``batch_seq``. A readout of no rows emits nothing. The state schema
+    is the dumped fields followed by ``seq long``; ``dump`` must return
+    plain Python ints and floats, because numpy scalars fail the
+    JVM-side state unpickler.
+    """
+
+    def fn(
+        k: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        *fields, seq = state.get if state.exists else (0,)
+        summary = load(*fields)
+        for pdf in pdfs:
+            summary = merge(summary, pdf)
+        seq = int(seq) + 1
+        state.update((*dump(summary), seq))
+        cols = readout(summary)
+        n = len(next(iter(cols.values())))
+        if n:
+            yield pd.DataFrame({key: [k[0]] * n, "batch_seq": [seq] * n, **cols})
+
+    return _keyed_state(keyed, fn, output_schema, state_schema, key)
+
+
+def _sorted_batch(pdfs: Iterator[pd.DataFrame], col: str) -> pd.DataFrame | None:
+    """A key's whole micro-batch, stably sorted by ``col``; None when it
+    has no rows. Arrow hands a group over as chunks in no particular
+    order, so sorting (and carrying state across) each chunk on its own
+    is wrong as soon as a key's batch spans chunks. Memory: one key's
+    rows per micro-batch."""
+    chunks = [pdf for pdf in pdfs if len(pdf)]
+    if not chunks:
+        return None
+    return pd.concat(chunks, ignore_index=True).sort_values(col, kind="stable")
+
 
 LOCF_OUTPUT_SCHEMA = (
     "key string, ts timestamp, value double, prev_ts timestamp, prev_value double"
@@ -48,38 +135,29 @@ def _locf_fn(
     else:
         last_ts_us, last_value = None, None
 
-    out = []
-    for pdf in pdfs:
-        if not len(pdf):
-            continue
-        pdf = pdf.sort_values("ts", kind="stable")
-        ts_us = pdf["ts"].astype("int64") // 1000  # ns -> us
-        prev_ts_us = ts_us.shift(1)
-        prev_val = pdf["value"].shift(1)
-        # seed the first row of the batch from carried state
-        if last_ts_us is not None:
-            prev_ts_us.iloc[0] = last_ts_us
-            prev_val.iloc[0] = last_value
-        out.append(
-            pd.DataFrame(
-                {
-                    "key": key[0],
-                    "ts": pdf["ts"],
-                    "value": pdf["value"],
-                    "prev_ts": pd.to_datetime(prev_ts_us, unit="us"),
-                    "prev_value": prev_val,
-                }
-            )
-        )
-        tail = pdf.iloc[-1]
-        new_ts_us = int(ts_us.iloc[-1])
-        if last_ts_us is None or new_ts_us >= last_ts_us:
-            last_ts_us, last_value = new_ts_us, float(tail["value"])
-
+    pdf = _sorted_batch(pdfs, "ts")
+    if pdf is None:
+        return
+    ts_us = pdf["ts"].astype("int64") // 1000  # ns -> us
+    prev_ts_us = ts_us.shift(1)
+    prev_val = pdf["value"].shift(1)
+    # seed the first row of the batch from carried state
     if last_ts_us is not None:
-        state.update((last_ts_us, last_value))
-    if out:
-        yield pd.concat(out, ignore_index=True)
+        prev_ts_us.iloc[0] = last_ts_us
+        prev_val.iloc[0] = last_value
+    new_ts_us = int(ts_us.iloc[-1])
+    if last_ts_us is None or new_ts_us >= last_ts_us:
+        last_ts_us, last_value = new_ts_us, float(pdf["value"].iloc[-1])
+    state.update((last_ts_us, last_value))
+    yield pd.DataFrame(
+        {
+            "key": key[0],
+            "ts": pdf["ts"],
+            "value": pdf["value"],
+            "prev_ts": pd.to_datetime(prev_ts_us, unit="us"),
+            "prev_value": prev_val,
+        }
+    )
 
 
 def locf_enrich(
@@ -95,20 +173,13 @@ def locf_enrich(
     observation's (ts, value) attached — the building block for
     streaming pad-alignment and gap/staleness detection.
     """
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
+    keyed = _keyed(
+        stream,
+        key_col,
         F.col(ts_col).alias("ts"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _locf_fn,
-        outputStructType=LOCF_OUTPUT_SCHEMA,
-        stateStructType=LOCF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_state(keyed, _locf_fn, LOCF_OUTPUT_SCHEMA, LOCF_STATE_SCHEMA)
 
 
 EWMA_OUTPUT_SCHEMA = "key string, ts timestamp, value double, ewma double"
@@ -142,6 +213,8 @@ def _round_half_up(y, round_to: int):
     return fast
 
 
+
+
 def _make_ewma_fn(alpha: float, window_rows: int, round_to: int):
     beta = 1.0 - alpha
     W = window_rows
@@ -158,49 +231,42 @@ def _make_ewma_fn(alpha: float, window_rows: int, round_to: int):
             vals, n_seen = state.get
             carried = list(vals)
 
-        out = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("ts", kind="stable")
-            x = pdf["value"].to_numpy(dtype=np.float64)
-            s = np.concatenate([np.asarray(carried, dtype=np.float64), x])
-            m, off = len(s), len(carried)
-            # accumulate in increasing-lag order — the SAME left-to-right
-            # sum the batch operator and its SQL oracle use, so values
-            # agree bit-for-bit before the shared round()
-            numer = np.zeros(m)
-            denom = np.zeros(m)
-            for j in range(W):
-                if j >= m:
-                    break
-                numer[j:] += (beta**j) * s[: m - j]
-                denom[j:] += beta**j
-            # rows 0..off-1 are carried context whose outputs were
-            # emitted in earlier batches. For output rows (>= off) both
-            # sums are exact: the state keeps the last W-1 values, so
-            # an output row's min(off+i+1, W) in-slice terms are
-            # exactly its min(total_seen+i+1, W) true terms — carried
-            # is only ever shorter than W-1 when it IS the full history
-            y = numer[off:] / denom[off:]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "key": key[0],
-                        "ts": pdf["ts"],
-                        "value": pdf["value"],
-                        "ewma": _round_half_up(y, round_to),
-                    }
-                )
-            )
-            # plain Python floats/ints: numpy scalars fail the JVM-side
-            # state unpickler
-            carried = [float(v) for v in s[-(W - 1):]] if W > 1 else []
-            n_seen = int(min(n_seen + len(x), W))
-
-        state.update((carried, n_seen))
-        if out:
-            yield pd.concat(out, ignore_index=True)
+        pdf = _sorted_batch(pdfs, "ts")
+        if pdf is None:
+            state.update((carried, n_seen))
+            return
+        x = pdf["value"].to_numpy(dtype=np.float64)
+        s = np.concatenate([np.asarray(carried, dtype=np.float64), x])
+        m, off = len(s), len(carried)
+        # accumulate in increasing-lag order — the SAME left-to-right
+        # sum the batch operator and its SQL oracle use, so values
+        # agree bit-for-bit before the shared round()
+        numer = np.zeros(m)
+        denom = np.zeros(m)
+        for j in range(W):
+            if j >= m:
+                break
+            numer[j:] += (beta**j) * s[: m - j]
+            denom[j:] += beta**j
+        # rows 0..off-1 are carried context whose outputs were emitted
+        # in earlier batches. For output rows (>= off) both sums are
+        # exact: the state keeps the last W-1 values, so an output
+        # row's min(off+i+1, W) in-slice terms are exactly its
+        # min(total_seen+i+1, W) true terms — carried is only ever
+        # shorter than W-1 when it IS the full history
+        y = numer[off:] / denom[off:]
+        # plain Python floats/ints: numpy scalars fail the JVM-side
+        # state unpickler
+        carried = [float(v) for v in s[-(W - 1):]] if W > 1 else []
+        state.update((carried, int(min(n_seen + len(x), W))))
+        yield pd.DataFrame(
+            {
+                "key": key[0],
+                "ts": pdf["ts"],
+                "value": pdf["value"],
+                "ewma": _round_half_up(y, round_to),
+            }
+        )
 
     return _ewma_fn
 
@@ -226,19 +292,19 @@ def ewma_stream(
     record was already emitted computes against the state as-is rather
     than rewinding it.
     """
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
+    if window_rows < 1:
+        raise ValueError("window_rows must be >= 1")
+    keyed = _keyed(
+        stream,
+        key_col,
         F.col(ts_col).alias("ts"),
         F.col(value_col).cast("double").alias("value"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
+    return _keyed_state(
+        keyed,
         _make_ewma_fn(alpha, window_rows, round_to),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        EWMA_OUTPUT_SCHEMA,
+        EWMA_STATE_SCHEMA,
     )
 
 
@@ -248,55 +314,39 @@ KMV_OUTPUT_SCHEMA = (
 KMV_STATE_SCHEMA = "hashes array<long>, seq long"
 
 
-def _make_kmv_fn(k: int, round_to: int):
+def _kmv_summary(k: int, round_to: int) -> tuple:
     from multi_sensor_data_pipeline_for_robotics__spark.functions.sketch import (
         _DENOM,
     )
 
-    def _kmv_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def merge(hs: list, pdf: pd.DataFrame) -> list:
         import hashlib
 
-        hs, seq = ([], 0)
-        if state.exists:
-            hs, seq = state.get
-            hs = list(hs)
         cur = set(hs)
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                # batch parity: Spark's md5(cast(NULL AS string)) is
-                # NULL, so nulls contribute NOTHING to the batch sketch
-                # — str(None) would hash the literal 'None' and count a
-                # phantom distinct value
-                if v is None or pd.isna(v):
-                    continue
-                # the same bytes Spark's md5(cast(value AS string)) sees
-                cur.add(int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16))
+        for v in pdf["value"]:
+            # batch parity: Spark's md5(cast(NULL AS string)) is
+            # NULL, so nulls contribute NOTHING to the batch sketch
+            # — str(None) would hash the literal 'None' and count a
+            # phantom distinct value
+            if v is None or pd.isna(v):
+                continue
+            # the same bytes Spark's md5(cast(value AS string)) sees
+            cur.add(int(hashlib.md5(str(v).encode()).hexdigest()[:15], 16))
         # KMV merge law: the k smallest of the union equal the k
         # smallest of (previous k smallest ∪ new hashes) — the k-th
         # smallest only ever decreases, so discarded hashes can never
         # re-enter. State stays O(k) per key forever.
-        hs = sorted(cur)[:k]
-        seq += 1
+        return sorted(cur)[:k]
+
+    def readout(hs: list) -> dict:
         m = len(hs)
         if m < k:
             est = float(m)  # sketch not saturated -> the count is exact
         else:
             est = float(_round_half_up([(k - 1) / (hs[-1] / _DENOM)], round_to)[0])
-        state.update(([int(h) for h in hs], int(seq)))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "batch_seq": [seq],
-                "approx_distinct": [est],
-                "sketch_m": [m],
-            }
-        )
+        return {"approx_distinct": [est], "sketch_m": [m]}
 
-    return _kmv_fn
+    return list, merge, (lambda hs: ([int(h) for h in hs],)), readout
 
 
 def kmv_stream(
@@ -322,54 +372,53 @@ def kmv_stream(
     under at-least-once delivery, a property HLL shares but exact
     counters do not.
     """
-    from pyspark.sql import functions as F
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    return _summary_stream(
+        _keyed(stream, key_col, F.col(value_col).cast("string").alias("value")),
+        KMV_OUTPUT_SCHEMA,
+        KMV_STATE_SCHEMA,
+        *_kmv_summary(k, round_to),
+    )
 
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_kmv_fn(k, round_to),
-        outputStructType=KMV_OUTPUT_SCHEMA,
-        stateStructType=KMV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+
+def _bin_counts(bins: int, lo: float, hi: float) -> tuple:
+    """(load, merge, dump) of the sparse fixed-bin histogram
+    summary, a bin -> count dict, shared by ``hist_stream`` and
+    ``drift_stream``. Raises ValueError on an empty bin range."""
+    if bins < 1 or hi <= lo:
+        raise ValueError("need bins >= 1 and hi > lo")
+    w = (hi - lo) / bins
+
+    def merge(d: dict, pdf: pd.DataFrame) -> dict:
+        import numpy as np
+
+        v = pdf["value"].to_numpy(dtype=np.float64)
+        v = v[~np.isnan(v)]
+        # the batch operator's exact binning: floor((v-lo)/w),
+        # clamped into the edge bins
+        b = np.clip(np.floor((v - lo) / w), 0, bins - 1).astype(np.int64)
+        for bi, ci in zip(*np.unique(b, return_counts=True)):
+            d[int(bi)] = d.get(int(bi), 0) + int(ci)
+        return d
+
+    def dump(d: dict) -> tuple:
+        sb = sorted(d)
+        return [int(b) for b in sb], [int(d[b]) for b in sb]
+
+    return (lambda bs=(), cs=(): dict(zip(bs, cs))), merge, dump
 
 
 HIST_OUTPUT_SCHEMA = "key string, batch_seq long, q double, quantile double"
 HIST_STATE_SCHEMA = "bins array<long>, cnts array<long>, seq long"
 
 
-def _make_hist_fn(
-    qs: tuple, bins: int, lo: float, hi: float, round_to: int
-):
+def _hist_readout(qs: tuple, bins: int, lo: float, hi: float, round_to: int):
     w = (hi - lo) / bins
 
-    def _hist_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def readout(d: dict) -> dict:
         import numpy as np
 
-        d: dict[int, int] = {}
-        seq = 0
-        if state.exists:
-            bs, cs, seq = state.get
-            d = dict(zip(bs, cs))
-        for pdf in pdfs:
-            v = pdf["value"].to_numpy(dtype=np.float64)
-            v = v[~np.isnan(v)]
-            if not len(v):
-                continue
-            # the batch operator's exact binning: floor((v-lo)/w),
-            # clamped into the edge bins
-            b = np.clip(np.floor((v - lo) / w), 0, bins - 1).astype(np.int64)
-            u, c = np.unique(b, return_counts=True)
-            for bi, ci in zip(u, c):
-                d[int(bi)] = d.get(int(bi), 0) + int(ci)
-        seq += 1
         sb = sorted(d)
         cnt = np.array([d[b] for b in sb], dtype=np.int64)
         cum = np.cumsum(cnt)
@@ -390,20 +439,9 @@ def _make_hist_fn(
                     out_q.append(float(q))
                     out_v.append(float(_round_half_up([est], round_to)[0]))
                     break
-        state.update(
-            ([int(b) for b in sb], [int(x) for x in cnt], int(seq))
-        )
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "key": key[0],
-                    "batch_seq": seq,
-                    "q": out_q,
-                    "quantile": out_v,
-                }
-            )
+        return {"q": out_q, "quantile": out_v}
 
-    return _hist_fn
+    return readout
 
 
 def hist_stream(
@@ -428,18 +466,15 @@ def hist_stream(
     precision, same HALF_UP rounding — graded with the SAME DuckDB
     oracle.
     """
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_hist_fn(tuple(qs), bins, lo, hi, round_to),
-        outputStructType=HIST_OUTPUT_SCHEMA,
-        stateStructType=HIST_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    for q in qs:
+        if not 0.0 < q <= 1.0:
+            raise ValueError(f"quantile {q} outside (0, 1]")
+    return _summary_stream(
+        _keyed(stream, key_col, F.col(value_col).cast("double").alias("value")),
+        HIST_OUTPUT_SCHEMA,
+        HIST_STATE_SCHEMA,
+        *_bin_counts(bins, lo, hi),
+        _hist_readout(tuple(qs), bins, lo, hi, round_to),
     )
 
 
@@ -447,7 +482,7 @@ CMS_OUTPUT_SCHEMA = "key string, batch_seq long, value string, est_count long"
 CMS_STATE_SCHEMA = "ds array<int>, ws array<long>, cnts array<long>, seq long"
 
 
-def _make_cms_fn(probes: tuple, depth: int, width: int):
+def _cms_summary(probes: tuple, depth: int, width: int) -> tuple:
     def _positions(v: str) -> list[int]:
         import hashlib
 
@@ -461,46 +496,33 @@ def _make_cms_fn(probes: tuple, depth: int, width: int):
             for d in range(depth)
         ]
 
-    def _cms_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        cells: dict[tuple[int, int], int] = {}
-        seq = 0
-        if state.exists:
-            ds, ws, cs, seq = state.get
-            cells = {(int(d), int(w)): int(c) for d, w, c in zip(ds, ws, cs)}
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                if v is None or pd.isna(v):
-                    continue  # batch parity: md5(NULL) is NULL -> no cell
-                for d, w in enumerate(_positions(str(v))):
-                    cells[(d, w)] = cells.get((d, w), 0) + 1
-        seq += 1
+    def load(ds=(), ws=(), cs=()) -> dict:
+        return {(int(d), int(w)): int(c) for d, w, c in zip(ds, ws, cs)}
+
+    def merge(cells: dict, pdf: pd.DataFrame) -> dict:
+        for v in pdf["value"]:
+            if v is None or pd.isna(v):
+                continue  # batch parity: md5(NULL) is NULL -> no cell
+            for d, w in enumerate(_positions(str(v))):
+                cells[(d, w)] = cells.get((d, w), 0) + 1
+        return cells
+
+    def dump(cells: dict) -> tuple:
         items = sorted(cells)
-        state.update(
-            (
-                [d for d, _ in items],
-                [w for _, w in items],
-                [cells[k] for k in items],
-                int(seq),
-            )
+        return (
+            [d for d, _ in items],
+            [w for _, w in items],
+            [cells[c] for c in items],
         )
+
+    def readout(cells: dict) -> dict:
         ests = [
             min(cells.get((d, w), 0) for d, w in enumerate(_positions(p)))
             for p in probes
         ]
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(probes),
-                "batch_seq": [seq] * len(probes),
-                "value": list(probes),
-                "est_count": [int(e) for e in ests],
-            }
-        )
+        return {"value": list(probes), "est_count": [int(e) for e in ests]}
 
-    return _cms_fn
+    return load, merge, dump, readout
 
 
 def cms_stream(
@@ -526,18 +548,13 @@ def cms_stream(
     its counters again (counts are not idempotent, unlike the KMV
     set-union state) — feed exactly-once sources or dedup upstream.
     """
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_cms_fn(tuple(str(p) for p in probes), depth, width),
-        outputStructType=CMS_OUTPUT_SCHEMA,
-        stateStructType=CMS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    if depth < 1 or width < 1:
+        raise ValueError("depth and width must be >= 1")
+    return _summary_stream(
+        _keyed(stream, key_col, F.col(value_col).cast("string").alias("value")),
+        CMS_OUTPUT_SCHEMA,
+        CMS_STATE_SCHEMA,
+        *_cms_summary(tuple(str(p) for p in probes), depth, width),
     )
 
 
@@ -548,36 +565,10 @@ DRIFT_OUTPUT_SCHEMA = (
 DRIFT_STATE_SCHEMA = "bins array<long>, cnts array<long>, seq long"
 
 
-def _make_drift_fn(
-    ref_counts: dict, bins: int, lo: float, hi: float, alpha: float,
-    round_to: int,
-):
-    w = (hi - lo) / bins
-
-    def _drift_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+def _drift_readout(ref_counts: dict, bins: int, alpha: float, round_to: int):
+    def readout(d: dict) -> dict:
         import numpy as np
 
-        d: dict[int, int] = {}
-        seq = 0
-        if state.exists:
-            bs, cs, seq = state.get
-            d = dict(zip(bs, cs))
-        for pdf in pdfs:
-            v = pdf["value"].to_numpy(dtype=np.float64)
-            v = v[~np.isnan(v)]
-            if not len(v):
-                continue
-            b = np.clip(np.floor((v - lo) / w), 0, bins - 1).astype(np.int64)
-            u, c = np.unique(b, return_counts=True)
-            for bi, ci in zip(u, c):
-                d[int(bi)] = d.get(int(bi), 0) + int(ci)
-        seq += 1
-        sb = sorted(d)
-        state.update(([int(b) for b in sb], [int(d[b]) for b in sb], int(seq)))
         # the batch histogram_drift arithmetic over the full bin spine:
         # a = the accumulated stream, b = the broadcast reference
         ca = np.zeros(bins)
@@ -596,18 +587,11 @@ def _make_drift_fn(
             float(np.abs(p - q).sum() / 2),
         ]
         vals = [float(_round_half_up([x], round_to)[0]) for x in vals]
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "batch_seq": [seq],
-                "kl_ab": [vals[0]],
-                "kl_ba": [vals[1]],
-                "js_divergence": [vals[2]],
-                "tvd": [vals[3]],
-            }
-        )
+        return {
+            c: [v] for c, v in zip(("kl_ab", "kl_ba", "js_divergence", "tvd"), vals)
+        }
 
-    return _drift_fn
+    return readout
 
 
 def drift_stream(
@@ -637,21 +621,16 @@ def drift_stream(
     arithmetic, same HALF_UP rounding) — graded against the same
     DuckDB replay as the batch operator.
     """
-    from pyspark.sql import functions as F
-
+    counts = _bin_counts(bins, lo, hi)
     ref = {
         int(r["bin"]): int(r["cnt"]) for r in reference_hist.collect()
     }
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_drift_fn(ref, bins, lo, hi, alpha, round_to),
-        outputStructType=DRIFT_OUTPUT_SCHEMA,
-        stateStructType=DRIFT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _summary_stream(
+        _keyed(stream, key_col, F.col(value_col).cast("double").alias("value")),
+        DRIFT_OUTPUT_SCHEMA,
+        DRIFT_STATE_SCHEMA,
+        *counts,
+        _drift_readout(ref, bins, alpha, round_to),
     )
 
 
@@ -661,42 +640,41 @@ HH_OUTPUT_SCHEMA = (
 HH_STATE_SCHEMA = "vals array<string>, cnts array<long>, seq long"
 
 
-def _make_hh_fn(phi: float, round_to: int):
-    def _hh_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        d: dict[str, int] = {}
-        seq = 0
-        if state.exists:
-            vs, cs, seq = state.get
-            d = {v: int(c) for v, c in zip(vs, cs)}
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                if v is None or pd.isna(v):
-                    continue  # batch parity: heavy_hitters drops nulls
-                s = str(v)
-                d[s] = d.get(s, 0) + 1
-        seq += 1
-        items = sorted(d.items())
-        state.update(
-            ([v for v, _ in items], [int(c) for _, c in items], int(seq))
-        )
-        n = sum(d.values())
-        hh = [(v, c) for v, c in items if n and c >= n * phi]
-        freqs = _round_half_up([c / n for _, c in hh], round_to) if hh else []
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(hh),
-                "batch_seq": [seq] * len(hh),
-                "value": [v for v, _ in hh],
-                "cnt": [int(c) for _, c in hh],
-                "freq": [float(f) for f in freqs],
-            }
-        )
+def _count_values(d: dict, pdf: pd.DataFrame) -> dict:
+    for v in pdf["value"]:
+        if v is None or pd.isna(v):
+            continue  # batch parity: heavy_hitters and top_k drop nulls
+        s = str(v)
+        d[s] = d.get(s, 0) + 1
+    return d
 
-    return _hh_fn
+
+def _dump_value_counts(d: dict) -> tuple:
+    items = sorted(d.items())
+    return [v for v, _ in items], [int(c) for _, c in items]
+
+
+# (load, merge, dump) of the exact value -> count table shared by
+# heavy_hitters_stream and top_k_frequent_stream (HH_STATE_SCHEMA)
+_VALUE_COUNTS = (
+    lambda vs=(), cs=(): {v: int(c) for v, c in zip(vs, cs)},
+    _count_values,
+    _dump_value_counts,
+)
+
+
+def _hh_readout(phi: float, round_to: int):
+    def readout(d: dict) -> dict:
+        n = sum(d.values())
+        hh = [(v, c) for v, c in sorted(d.items()) if n and c >= n * phi]
+        freqs = _round_half_up([c / n for _, c in hh], round_to) if hh else []
+        return {
+            "value": [v for v, _ in hh],
+            "cnt": [int(c) for _, c in hh],
+            "freq": [float(f) for f in freqs],
+        }
+
+    return readout
 
 
 def heavy_hitters_stream(
@@ -726,18 +704,12 @@ def heavy_hitters_stream(
     At-least-once delivery replays inflate counts (not idempotent,
     unlike ``kmv_stream``'s set state) — dedup upstream.
     """
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_hh_fn(phi, round_to),
-        outputStructType=HH_OUTPUT_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _summary_stream(
+        _keyed(stream, key_col, F.col(value_col).cast("string").alias("value")),
+        HH_OUTPUT_SCHEMA,
+        HH_STATE_SCHEMA,
+        *_VALUE_COUNTS,
+        _hh_readout(phi, round_to),
     )
 
 
@@ -746,41 +718,17 @@ TOPK_OUTPUT_SCHEMA = (
 )
 
 
-def _make_topk_fn(k: int):
-    def _topk_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        d: dict[str, int] = {}
-        seq = 0
-        if state.exists:
-            vs, cs, seq = state.get
-            d = {v: int(c) for v, c in zip(vs, cs)}
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                if v is None or pd.isna(v):
-                    continue
-                s = str(v)
-                d[s] = d.get(s, 0) + 1
-        seq += 1
-        items = sorted(d.items())
-        state.update(
-            ([v for v, _ in items], [int(c) for _, c in items], int(seq))
-        )
+def _topk_readout(k: int):
+    def readout(d: dict) -> dict:
         # batch tie law: cnt desc, value asc
         top = sorted(d.items(), key=lambda vc: (-vc[1], vc[0]))[:k]
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * len(top),
-                "batch_seq": [seq] * len(top),
-                "value": [v for v, _ in top],
-                "cnt": [int(c) for _, c in top],
-                "rank": [i + 1 for i in range(len(top))],
-            }
-        )
+        return {
+            "value": [v for v, _ in top],
+            "cnt": [int(c) for _, c in top],
+            "rank": [i + 1 for i in range(len(top))],
+        }
 
-    return _topk_fn
+    return readout
 
 
 def top_k_frequent_stream(
@@ -797,18 +745,14 @@ def top_k_frequent_stream(
     over the same rows. Same state-shape caveats as
     ``heavy_hitters_stream`` (exact O(distinct/key) state;
     at-least-once replays inflate counts)."""
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("string").alias("value"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_topk_fn(k),
-        outputStructType=TOPK_OUTPUT_SCHEMA,
-        stateStructType=HH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    return _summary_stream(
+        _keyed(stream, key_col, F.col(value_col).cast("string").alias("value")),
+        TOPK_OUTPUT_SCHEMA,
+        HH_STATE_SCHEMA,
+        *_VALUE_COUNTS,
+        _topk_readout(k),
     )
 
 
@@ -823,53 +767,51 @@ RFM_STATE_SCHEMA = (
 )
 
 
-def _make_rfm_fn(round_to: int):
+def _rfm_summary(round_to: int) -> tuple:
+    """Summary (n, nv, sm, fu, lu, types); the state stores a missing
+    first/last timestamp as -1."""
     from decimal import Decimal
 
-    def _rfm_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        n = nv = sm = 0
-        fu = lu = None
-        types: set = set()
-        seq = 0
-        if state.exists:
-            n, nv, sm, fu, lu, tlist, seq = state.get
-            types = set(tlist)
-            fu = None if fu == -1 else fu
-            lu = None if lu == -1 else lu
-        for pdf in pdfs:
-            n += len(pdf)
-            for t in pdf["event_type"]:
-                if t is not None and not pd.isna(t):
-                    types.add(str(t))
-            for v in pdf["value"]:
-                if v is None or pd.isna(v):
-                    continue
-                nv += 1
-                # exact decimal micro-units: the same shortest-repr
-                # double->decimal(.,6) cast the batch oracle sums
-                sm += int(Decimal(str(v)).scaleb(6))
-            for u in pdf["ts_us"]:
-                if u is None or pd.isna(u):
-                    continue
-                u = int(u)
-                fu = u if fu is None or u < fu else fu
-                lu = u if lu is None or u > lu else lu
-        seq += 1
-        state.update(
-            (
-                int(n),
-                int(nv),
-                int(sm),
-                -1 if fu is None else int(fu),
-                -1 if lu is None else int(lu),
-                sorted(types),
-                int(seq),
-            )
+    def load(n=0, nv=0, sm=0, fu=-1, lu=-1, types=()) -> tuple:
+        return (
+            n, nv, sm, None if fu == -1 else fu, None if lu == -1 else lu,
+            set(types),
         )
+
+    def merge(acc: tuple, pdf: pd.DataFrame) -> tuple:
+        n, nv, sm, fu, lu, types = acc
+        n += len(pdf)
+        for t in pdf["event_type"]:
+            if t is not None and not pd.isna(t):
+                types.add(str(t))
+        for v in pdf["value"]:
+            if v is None or pd.isna(v):
+                continue
+            nv += 1
+            # exact decimal micro-units: the same shortest-repr
+            # double->decimal(.,6) cast the batch oracle sums
+            sm += int(Decimal(str(v)).scaleb(6))
+        for u in pdf["ts_us"]:
+            if u is None or pd.isna(u):
+                continue
+            u = int(u)
+            fu = u if fu is None or u < fu else fu
+            lu = u if lu is None or u > lu else lu
+        return n, nv, sm, fu, lu, types
+
+    def dump(acc: tuple) -> tuple:
+        n, nv, sm, fu, lu, types = acc
+        return (
+            int(n),
+            int(nv),
+            int(sm),
+            -1 if fu is None else int(fu),
+            -1 if lu is None else int(lu),
+            sorted(types),
+        )
+
+    def readout(acc: tuple) -> dict:
+        n, nv, sm, fu, lu, types = acc
         # exact-integer micro arithmetic, displayed as plain micro/1e6
         # divisions with NO rounding — round(quotient, 4) is the
         # cross-engine half-boundary trap (see
@@ -880,21 +822,17 @@ def _make_rfm_fn(round_to: int):
         if fu is not None:
             span_days = max((lu - fu) / 86400e6, 1.0 / 86400.0)
             epd = _round_half_up([n / span_days], round_to)[0]
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "batch_seq": [seq],
-                "n_events": [int(n)],
-                "n_event_types": [len(types)],
-                "first_us": [fu],
-                "last_us": [lu],
-                "total_value": [total],
-                "avg_value": [avg],
-                "events_per_day": [epd],
-            }
-        )
+        return {
+            "n_events": [int(n)],
+            "n_event_types": [len(types)],
+            "first_us": [fu],
+            "last_us": [lu],
+            "total_value": [total],
+            "avg_value": [avg],
+            "events_per_day": [epd],
+        }
 
-    return _rfm_fn
+    return load, merge, dump, readout
 
 
 def user_features_stream(
@@ -920,8 +858,6 @@ def user_features_stream(
     state store. At-least-once replays inflate counters (not
     idempotent); dedup upstream on event_id.
     """
-    from pyspark.sql import functions as F
-
     from multi_sensor_data_pipeline_for_robotics__spark.functions.timeutil import (
         ts_us,
     )
@@ -932,12 +868,12 @@ def user_features_stream(
         F.col(value_col).cast("double").alias("value"),
         F.col(type_col).cast("string").alias("event_type"),
     )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        _make_rfm_fn(round_to),
-        outputStructType=RFM_OUTPUT_SCHEMA,
-        stateStructType=RFM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _summary_stream(
+        keyed,
+        RFM_OUTPUT_SCHEMA,
+        RFM_STATE_SCHEMA,
+        *_rfm_summary(round_to),
+        key="user_id",
     )
 
 
@@ -945,42 +881,29 @@ BENFORD_OUTPUT_SCHEMA = "key string, batch_seq long, digit int, n_d long"
 BENFORD_STATE_SCHEMA = "counts array<long>, seq long"
 
 
-def _make_benford_fn(scale: int):
-    def _benford_fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        counts = [0] * 9
-        seq = 0
-        if state.exists:
-            cs, seq = state.get
-            counts = [int(c) for c in cs]
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                if v is None or pd.isna(v) or v <= 0:
-                    continue  # batch parity: benford_audit keeps x > 0
-                # HALF_UP like Spark's round() on doubles (Python's
-                # round() is half-even); digit 0 (underflow at this
-                # scale) is dropped, matching the batch 1..9 spine
-                m = int(v * scale + 0.5)
-                if m <= 0:
-                    continue
-                d = int(str(m)[0])
-                if 1 <= d <= 9:
-                    counts[d - 1] += 1
-        seq += 1
-        state.update(([int(c) for c in counts], int(seq)))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]] * 9,
-                "batch_seq": [seq] * 9,
-                "digit": list(range(1, 10)),
-                "n_d": [int(c) for c in counts],
-            }
-        )
+def _benford_summary(scale: int) -> tuple:
+    def merge(counts: list, pdf: pd.DataFrame) -> list:
+        for v in pdf["value"]:
+            if v is None or pd.isna(v) or v <= 0:
+                continue  # batch parity: benford_audit keeps x > 0
+            # HALF_UP like Spark's round() on doubles (Python's
+            # round() is half-even); digit 0 (underflow at this
+            # scale) is dropped, matching the batch 1..9 spine
+            m = int(v * scale + 0.5)
+            if m <= 0:
+                continue
+            d = int(str(m)[0])
+            if 1 <= d <= 9:
+                counts[d - 1] += 1
+        return counts
 
-    return _benford_fn
+    def readout(counts: list) -> dict:
+        return {"digit": list(range(1, 10)), "n_d": [int(c) for c in counts]}
+
+    def load(cs=(0,) * 9) -> list:
+        return [int(c) for c in cs]
+
+    return load, merge, (lambda cs: (load(cs),)), readout
 
 
 def benford_stream(
@@ -998,18 +921,11 @@ def benford_stream(
     counts stamped with a monotone ``batch_seq``.
 
     At-least-once caveat as ``cms_stream``: replayed rows re-count."""
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    return keyed.groupBy("key").applyInPandasWithState(
-        _make_benford_fn(scale),
-        outputStructType=BENFORD_OUTPUT_SCHEMA,
-        stateStructType=BENFORD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _summary_stream(
+        _keyed(stream, key_col, F.col(value_col).cast("double").alias("value")),
+        BENFORD_OUTPUT_SCHEMA,
+        BENFORD_STATE_SCHEMA,
+        *_benford_summary(scale),
     )
 
 
@@ -1097,42 +1013,27 @@ def sequence_stream(
     timestamp is matched in arrival order, not event time — feed
     per-key in-order streams (or one-batch file replays, as the graded
     query does) for batch parity."""
-    from pyspark.sql import functions as F
-
-    keyed = stream.filter(
-        F.col(type_col).isin(list(set(pattern)))
-    ).select(
-        F.col(key_col).cast("string").alias("key"),
+    if len(pattern) < 2:
+        raise ValueError("pattern needs at least 2 steps")
+    if max_gap_ms < 0:
+        raise ValueError("max_gap_ms must be >= 0")
+    keyed = _keyed(
+        stream.filter(F.col(type_col).isin(list(set(pattern)))),
+        key_col,
         F.unix_micros(F.col(ts_col)).alias("ts_us"),
         F.col(type_col).cast("string").alias("t"),
         F.col(tiebreak_col).cast("long").alias("tb"),
     )
-    return keyed.groupBy("key").applyInPandasWithState(
+    return _keyed_state(
+        keyed,
         _make_seq_fn(tuple(pattern), max_gap_ms * 1000),
-        outputStructType=SEQ_OUTPUT_SCHEMA,
-        stateStructType=SEQ_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        SEQ_OUTPUT_SCHEMA,
+        SEQ_STATE_SCHEMA,
     )
 
 
 MIX_OUTPUT_SCHEMA = "key string, batch_seq long, n long"
 MIX_STATE_SCHEMA = "n long, seq long"
-
-
-def _mix_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    n, seq = (state.get if state.exists else (0, 0))
-    for pdf in pdfs:
-        n += len(pdf)
-    seq += 1
-    state.update((int(n), int(seq)))
-    yield pd.DataFrame(
-        {"key": [key[0]], "batch_seq": [seq], "n": [int(n)]}
-    )
 
 
 def mixture_stream(
@@ -1149,15 +1050,14 @@ def mixture_stream(
 
     State is O(sources) forever — the cheapest possible monitor for
     "did last night's ingest shift the corpus mixture"."""
-    from pyspark.sql import functions as F
-
-    keyed = stream.select(F.col(source_col).cast("string").alias("key"))
-    return keyed.groupBy("key").applyInPandasWithState(
-        _mix_fn,
-        outputStructType=MIX_OUTPUT_SCHEMA,
-        stateStructType=MIX_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _summary_stream(
+        _keyed(stream, source_col),
+        MIX_OUTPUT_SCHEMA,
+        MIX_STATE_SCHEMA,
+        int,
+        lambda n, pdf: n + len(pdf),
+        lambda n: (int(n),),
+        lambda n: {"n": [int(n)]},
     )
 
 
@@ -1178,19 +1078,10 @@ def _make_token_budget_fn(budget: int):
         import numpy as np
 
         used = state.get[0] if state.exists else 0
-        # buffer the WHOLE micro-batch for this key before sorting:
-        # Arrow hands the group as ~10k-row chunks with no within-group
-        # order guarantee, so sorting each chunk independently would
-        # admit the wrong docs whenever a key's batch spans chunks.
-        # Memory = one key's rows per micro-batch, the same bound every
-        # sort-dependent operator in this module already accepts.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
+        pdf = _sorted_batch(pdfs, "doc_id")
+        if pdf is None:
             state.update((int(used),))
             return
-        pdf = pd.concat(chunks, ignore_index=True).sort_values(
-            "doc_id", kind="stable"
-        )
         toks = pdf["n_tokens"].to_numpy(dtype="int64")
         cum = used + np.cumsum(toks)
         # admit iff the running total BEFORE this doc is still under
@@ -1211,6 +1102,7 @@ def _make_token_budget_fn(budget: int):
             )
 
     return _budget_fn
+
 
 
 def token_budget_stream(
@@ -1259,8 +1151,6 @@ def token_budget_stream(
     "admit until full" means online; replaying out of id order is a
     semantically different (still valid) admission sequence.
     """
-    from pyspark.sql import functions as F
-
     if int(budget_tokens) <= 0:
         raise ValueError("budget_tokens must be positive")
     keyed = stream.select(
@@ -1272,12 +1162,11 @@ def token_budget_stream(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(tokens_col).cast("long").alias("n_tokens"),
     ).filter(F.col("doc_id").isNotNull() & F.col("n_tokens").isNotNull())
-    return keyed.groupBy("key").applyInPandasWithState(
+    return _keyed_state(
+        keyed,
         _make_token_budget_fn(budget_tokens),
-        outputStructType=TOKEN_BUDGET_OUTPUT_SCHEMA,
-        stateStructType=TOKEN_BUDGET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        TOKEN_BUDGET_OUTPUT_SCHEMA,
+        TOKEN_BUDGET_STATE_SCHEMA,
     )
 
 
@@ -1311,12 +1200,10 @@ def token_budget_stream_to_parquet(
     bounded by the budget, but O(admitted) I/O per micro-batch on a
     long-lived stream where this is O(admitting-epochs) rows).
 
-    Exactly-once landing: foreachBatch is at-least-once, so survivors
-    land PARTITIONED BY epoch id with dynamic partition overwrite (the
-    ``stream_corpus_screen_to_parquet`` recipe) — a retry of epoch N
-    rewrites only ``epoch_id=N`` from the same recovered ``used``
-    (sidecar rows < N are untouched by N's failed attempt),
-    reproducing the identical admitted rows. Epochs that admit nothing
+    Exactly-once landing: both tables go through the idempotent
+    epoch-partitioned sink (``streaming.epoch_sink``) — a retry of
+    epoch N rewrites only ``epoch_id=N`` from the same recovered
+    ``used``, reproducing the identical admitted rows. Epochs that admit nothing
     (empty batch, all-null rows, exhausted budget) write NEITHER sink
     — an empty partitioned write would leave a _SUCCESS-only directory
     that breaks schema inference on every later read and kill the
@@ -1329,17 +1216,19 @@ def token_budget_stream_to_parquet(
     columns ``(key, doc_id, n_tokens, cum_tokens)`` plus the sink's
     ``epoch_id`` partition column. Returns the StreamingQuery.
     """
-    from pyspark.sql import functions as F
-
     from multi_sensor_data_pipeline_for_robotics__spark.operators.pack import (
         global_running_sum,
+    )
+    from multi_sensor_data_pipeline_for_robotics__spark.streaming.epoch_sink import (
+        read_epochs_before,
+        write_epoch,
     )
 
     if int(budget_tokens) <= 0:
         raise ValueError("budget_tokens must be positive")
     B = int(budget_tokens)
     totals_path = out_path.rstrip("/") + "_totals"
-    TOTALS_SCHEMA = "batch_tokens long, used_after long, epoch_id int"
+    TOTALS_SCHEMA = "batch_tokens long, used_after long"
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1347,28 +1236,15 @@ def token_budget_stream_to_parquet(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(tokens_col).cast("long").alias("n_tokens"),
         ).filter(F.col("doc_id").isNotNull() & F.col("n_tokens").isNotNull())
-        # explicit existence probe (the sources.models Hadoop-FS
-        # pattern), NOT a broad try/except around the read: a transient
-        # sidecar read error must FAIL the batch (foreachBatch retries
-        # it) — swallowing it as used=0 would silently re-open a spent
-        # budget and over-admit. The read itself carries an EXPLICIT
-        # schema so a directory with no matching rows yields used=0
-        # instead of failing schema inference.
-        jvm = spark.sparkContext._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(totals_path)
-        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        if fs.exists(hpath):
-            last = (
-                spark.read.schema(TOTALS_SCHEMA)
-                .parquet(totals_path)
-                .filter(F.col("epoch_id") < int(epoch_id))
-                .orderBy(F.col("epoch_id").desc())
-                .limit(1)
-                .collect()
-            )
-            used = int(last[0]["used_after"]) if last else 0
-        else:  # first epoch: no admitting epoch has landed yet
-            used = 0
+        # the sidecar's latest epoch before this one; used=0 before the
+        # first admitting epoch lands
+        prior = read_epochs_before(spark, totals_path, TOTALS_SCHEMA, epoch_id)
+        last = (
+            prior.orderBy(F.col("epoch_id").desc()).limit(1).collect()
+            if prior is not None
+            else []
+        )
+        used = int(last[0]["used_after"]) if last else 0
         if used >= B:
             return
         cum = global_running_sum(rows, "doc_id", F.col("n_tokens"), "__cum")
@@ -1380,7 +1256,6 @@ def token_budget_stream_to_parquet(
                 "doc_id",
                 "n_tokens",
                 "cum_tokens",
-                F.lit(int(epoch_id)).alias("epoch_id"),
             )
         )
         admitted = admitted.localCheckpoint(eager=True)
@@ -1389,24 +1264,16 @@ def token_budget_stream_to_parquet(
         ).first()
         if not stats["n"]:
             return  # nothing admitted: skip both writes (see docstring)
-        (
-            admitted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(out_path)
-        )
+        write_epoch(admitted, out_path, epoch_id)
         # data sink first, totals second: a crash between them replays
         # epoch N from the UNCHANGED prior totals and dynamically
         # overwrites the same epoch_id=N rows — idempotent either way
-        (
+        write_epoch(
             spark.createDataFrame(
-                [(int(stats["t"]), int(used + stats["t"]), int(epoch_id))],
-                TOTALS_SCHEMA,
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(totals_path)
+                [(int(stats["t"]), int(used + stats["t"]))], TOTALS_SCHEMA
+            ),
+            totals_path,
+            epoch_id,
         )
 
     return (

@@ -284,6 +284,11 @@ def sync_wide_to_parquet(
     batch ids). Cross-batch carry of the last observation is the
     ``stateful.locf_enrich`` primitive; compose it upstream when
     batches are too fine for self-contained windows.
+
+    Delivery is at-least-once: foreachBatch retries a failed epoch and
+    the write appends, so a retry can land that epoch's rows twice. The
+    idempotent recipe is the epoch-partitioned sink
+    (``streaming.epoch_sink``, used by ``stream_corpus_screen_to_parquet``).
     """
     from pyspark.sql import functions as F
 
@@ -326,8 +331,11 @@ def sync_to_parquet(
     step_ms: int = 60_000,
 ) -> "object":
     """foreachBatch sink: each micro-batch is aligned with the BATCH
-    operators and appended as parquet — exactly-once via checkpointed
-    batch ids; the batch/streaming code paths share one implementation."""
+    operators and appended as parquet; the batch/streaming code paths
+    share one implementation. At-least-once, like
+    :func:`sync_wide_to_parquet`: a retried epoch appends again — the
+    epoch-partitioned sinks (``streaming.epoch_sink``) are the
+    idempotent recipe."""
     aligned = windowed_sensor_align(cam_stream, step_ms)
 
     def write_batch(df: DataFrame, epoch_id: int) -> None:

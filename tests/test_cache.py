@@ -51,3 +51,17 @@ def test_file_size_estimates_multi_file_range_and_local(spark, tmp_path, monkeyp
     monkeypatch.setattr(type(files), "inputFiles", counting)
     S._auto_reduce(files, 100, assume_network=True)
     assert len(calls) == 1
+
+
+def test_maybe_persist_size_gate(spark, monkeypatch):
+    """``maybe_persist`` persists iff the upstream estimate reaches
+    ``min_bytes`` (default ``DEFAULT_PERSIST_MIN_BYTES``, read per call);
+    a plan with no file scan estimates 0 bytes."""
+    assert not cache.maybe_persist(spark.range(10)).is_cached
+    forced = cache.maybe_persist(spark.range(10), min_bytes=0)
+    assert forced.is_cached
+    forced.unpersist()
+    monkeypatch.setattr(cache, "DEFAULT_PERSIST_MIN_BYTES", 0)
+    forced = cache.maybe_persist(spark.range(10))
+    assert forced.is_cached
+    forced.unpersist()

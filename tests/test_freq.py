@@ -242,6 +242,67 @@ def test_drift_stream_matches_batch_histogram_drift(spark, tmp_path):
             assert abs(got[i] - want[c]) < 2e-6, (k, c, got[i], want[c])
 
 
+def test_drift_stream_state_survives_restart(spark, tmp_path):
+    """The second micro-batch runs in a RESTARTED query on the same
+    checkpoint, so the bin counts come back from the state store: the
+    restarted query's row per key equals batch histogram_drift over
+    both files."""
+    from multi_sensor_data_pipeline_for_robotics__spark.plans.drift import (
+        _binned,
+        histogram_drift,
+    )
+    from multi_sensor_data_pipeline_for_robotics__spark.streaming.stateful import (
+        drift_stream,
+    )
+
+    bins, lo, hi = 32, 0.0, 100.0
+    ref = _binned(
+        spark.createDataFrame(
+            [(float((i * 7) % 100),) for i in range(300)], "value double"
+        ),
+        "value", bins, lo, hi,
+    )
+    rows = spark.createDataFrame(
+        [("a", float((i * 11) % 100)) for i in range(200)]
+        + [("b", float((i * 3) % 60)) for i in range(150)],
+        "k string, value double",
+    )
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = (
+            spark.readStream.schema("k string, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = (
+            drift_stream(stream, "value", "k", ref, bins=bins, lo=lo, hi=hi)
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    rows.filter(F.col("value") < 40).coalesce(1).write.mode("append").parquet(src)
+    run()
+    rows.filter(F.col("value") >= 40).coalesce(1).write.mode("append").parquet(src)
+    run()
+    emitted = spark.read.parquet(out).collect()
+    assert max(r["batch_seq"] for r in emitted) == 2
+    final = {}
+    for r in sorted(emitted, key=lambda r: r["batch_seq"]):
+        final[r["key"]] = (r["kl_ab"], r["kl_ba"], r["js_divergence"], r["tvd"])
+    for k in ("a", "b"):
+        want = histogram_drift(
+            _binned(rows.filter(F.col("k") == k), "value", bins, lo, hi), ref, bins
+        ).first()
+        for i, c in enumerate(("kl_ab", "kl_ba", "js_divergence", "tvd")):
+            assert abs(final[k][i] - want[c]) < 2e-6, (k, c, final[k][i], want[c])
+
+
 def test_heavy_hitters_and_topk_grouped(spark):
     rows = (
         [("g1", "x")] * 8 + [("g1", "y")] * 2
@@ -357,3 +418,53 @@ def test_heavy_hitters_stream_matches_batch_and_drops_stale(spark, tmp_path):
         ).collect()
     }
     assert final == want == {"z0": (20, 0.4), "z1": (20, 0.4)}
+
+
+def test_top_k_frequent_stream_state_carries_and_matches_batch(spark, tmp_path):
+    """Two micro-batches that reorder the top-k (and tie on count): the
+    last batch per key equals batch top_k_frequent over the union."""
+    from multi_sensor_data_pipeline_for_robotics__spark.streaming.stateful import (
+        top_k_frequent_stream,
+    )
+
+    b1 = [("g", "x")] * 6 + [("g", "y")] * 3 + [("h", "p")] * 2 + [("h", None)]
+    b2 = [("g", "z")] * 7 + [("g", "y")] * 3 + [("h", "q")] * 4
+    src = str(tmp_path / "topk_src")
+    for rows in (b1, b2):
+        spark.createDataFrame(rows, "k string, v string").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    stream = (
+        spark.readStream.schema("k string, v string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    out = top_k_frequent_stream(stream, "v", "k", k=2)
+    q = (
+        out.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("topk_stream_test")
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    emitted = spark.table("topk_stream_test").collect()
+    assert max(r["batch_seq"] for r in emitted) == 2
+    last = {}
+    for r in emitted:
+        last[r["key"]] = max(last.get(r["key"], 0), r["batch_seq"])
+    final = {
+        (r["key"], r["rank"]): (r["value"], r["cnt"])
+        for r in emitted
+        if r["batch_seq"] == last[r["key"]]
+    }
+    union = spark.createDataFrame(b1 + b2, "k string, v string")
+    want = {
+        (r["k"], r["rank"]): (r["v"], r["cnt"])
+        for r in FR.top_k_frequent(union, "v", k=2, group_col="k").collect()
+    }
+    # g: z 7 takes rank 1; x 6 and y 6 tie, value asc keeps x
+    assert final == want == {
+        ("g", 1): ("z", 7), ("g", 2): ("x", 6),
+        ("h", 1): ("q", 4), ("h", 2): ("p", 2),
+    }

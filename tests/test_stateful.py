@@ -5,9 +5,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from multi_sensor_data_pipeline_for_robotics__spark.streaming import stateful as ST
 from multi_sensor_data_pipeline_for_robotics__spark.streaming.stateful import (
     LOCF_OUTPUT_SCHEMA,
     locf_enrich,
@@ -564,3 +566,115 @@ def test_mixture_stream_counts_carry_across_batches(spark, tmp_path):
             spark.read.parquet(srcdir).groupBy("src")
             .agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert final == want
+
+
+def test_locf_and_ewma_sort_the_whole_microbatch(spark, tmp_path):
+    """One key's micro-batch reaches the state function as several
+    Arrow chunks in no particular order: LOCF and EWMA must sort the
+    whole batch, not each chunk (300 rows written newest first, Arrow
+    batches of 50 rows)."""
+    from multi_sensor_data_pipeline_for_robotics__spark.operators.timeseries import (
+        ewma as batch_ewma,
+    )
+
+    rows = [("a", T0 + dt.timedelta(seconds=i), float(i % 37)) for i in range(300)]
+    df = spark.createDataFrame(rows[::-1], "event_type string, ts timestamp, value double")
+    src = str(tmp_path / "chunked_src")
+    df.coalesce(1).write.parquet(src)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "50")
+    try:
+        for name, op in (
+            ("chunk_locf", locf_enrich),
+            ("chunk_ewma", lambda s: ST.ewma_stream(s, window_rows=4)),
+        ):
+            stream = spark.readStream.schema(
+                "event_type string, ts timestamp, value double"
+            ).parquet(src)
+            q = op(stream).writeStream.format("memory").queryName(name).start()
+            q.processAllAvailable()
+            q.stop()
+    finally:
+        spark.conf.set(key, old)
+
+    w = W.partitionBy("event_type").orderBy("ts")
+    want = {
+        r["ts"]: r["prev_value"]
+        for r in df.select("ts", F.lag("value").over(w).alias("prev_value")).collect()
+    }
+    got = {r["ts"]: r["prev_value"] for r in spark.table("chunk_locf").collect()}
+    got[T0] = None if got[T0] != got[T0] else got[T0]  # first row: NaN
+    assert got == want
+    want = {
+        r["ts"]: r["ewma"]
+        for r in batch_ewma(df, "event_type", "ts", "value", window_rows=4).collect()
+    }
+    assert {r["ts"]: r["ewma"] for r in spark.table("chunk_ewma").collect()} == want
+
+
+_BAD_STREAM_CALLS = {
+    "kmv_k0": (lambda s, ref: ST.kmv_stream(s, "v", "k", k=0), "k must be"),
+    "top_k_k0": (
+        lambda s, ref: ST.top_k_frequent_stream(s, "v", "k", k=0), "k must be"
+    ),
+    "hist_bins0": (lambda s, ref: ST.hist_stream(s, "v", "k", bins=0), "bins"),
+    "hist_hi_eq_lo": (
+        lambda s, ref: ST.hist_stream(s, "v", "k", lo=5.0, hi=5.0), "hi > lo"
+    ),
+    "hist_q0": (lambda s, ref: ST.hist_stream(s, "v", "k", qs=(0.0,)), "outside"),
+    "hist_q_above_1": (
+        lambda s, ref: ST.hist_stream(s, "v", "k", qs=(0.5, 1.5)), "outside"
+    ),
+    "drift_bins0": (
+        lambda s, ref: ST.drift_stream(s, "v", "k", ref, bins=0), "bins"
+    ),
+    "drift_hi_below_lo": (
+        lambda s, ref: ST.drift_stream(s, "v", "k", ref, lo=1.0, hi=0.0),
+        "hi > lo",
+    ),
+    "cms_depth0": (
+        lambda s, ref: ST.cms_stream(s, "v", "k", ("1",), depth=0), "depth"
+    ),
+    "cms_width0": (
+        lambda s, ref: ST.cms_stream(s, "v", "k", ("1",), width=0), "width"
+    ),
+    "ewma_window0": (
+        lambda s, ref: ST.ewma_stream(s, "k", "ts", "v", window_rows=0),
+        "window_rows",
+    ),
+    "sequence_one_step": (
+        lambda s, ref: ST.sequence_stream(s, "k", "ts", "et", ["A"], 1000, "id"),
+        "at least 2 steps",
+    ),
+    "sequence_negative_gap": (
+        lambda s, ref: ST.sequence_stream(s, "k", "ts", "et", ["A", "B"], -1, "id"),
+        "max_gap_ms",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_STREAM_CALLS))
+def test_bad_stream_args_raise_before_any_query_or_job(spark, case):
+    """Stream twins reject bad sketch, window and pattern arguments with
+    a ValueError before any Spark job or streaming query starts — not
+    a worker crash, NaN output, silently empty output or unbounded
+    state once the query runs."""
+    stream = spark.readStream.format("rate").load().select(
+        F.lit("k").alias("k"),
+        F.col("timestamp").alias("ts"),
+        F.col("value").cast("double").alias("v"),
+        F.col("value").alias("id"),
+        F.lit("A").alias("et"),
+    )
+    # collecting this reference histogram needs a Spark job
+    ref = spark.range(4).select(
+        F.col("id").cast("int").alias("bin"), F.lit(1).cast("long").alias("cnt")
+    )
+    call, match = _BAD_STREAM_CALLS[case]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match=match):
+        call(stream, ref)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert spark.streams.active == []

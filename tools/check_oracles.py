@@ -17,6 +17,7 @@ import datetime as dt
 import math
 import os
 import sys
+import tempfile
 from decimal import Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -89,7 +90,21 @@ def main():
     args = ap.parse_args()
 
     spark = get_session(app_name="check_oracles")
-    con = duckdb.connect()
+    # the oracles' spill files go to a private temp dir removed at exit,
+    # not to DuckDB's default .tmp/ under the working directory
+    spill = tempfile.TemporaryDirectory(prefix="check_oracles_duckdb_")
+    con = duckdb.connect(config={"temp_directory": spill.name})
+    try:
+        n_fail = _check_all(spark, con, args)
+    finally:
+        con.close()
+        spill.cleanup()
+    sys.exit(1 if n_fail else 0)
+
+
+def _check_all(spark, con, args) -> int:
+    """Run the named queries and their oracles; return the number that
+    failed."""
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'"
@@ -133,7 +148,7 @@ def main():
             print(f"[{name}] OK ({len(duck_rows)} rows)")
             n_pass += 1
     print(f"\n{n_pass} ok, {n_fail} fail, {n_skipped} rows-only")
-    sys.exit(1 if n_fail else 0)
+    return n_fail
 
 
 if __name__ == "__main__":
