@@ -19,7 +19,18 @@ Layout:
     streaming/  Structured Streaming surface of the sync pipeline
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from multi_sensor_data_pipeline_for_robotics__spark.session import get_session
+
+# Functions shipped to Python workers (pandas UDFs, stateful-stream
+# state functions, mapInPandas kernels) are pickled with their code, not
+# by import path, so a worker that cannot import this package (a driver
+# run outside the repo root, a cluster without the package installed)
+# still runs them. Registering the package covers all its submodules.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_session"]
 __version__ = "0.1.0"

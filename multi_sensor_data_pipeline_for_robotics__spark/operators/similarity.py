@@ -52,6 +52,17 @@ def _check_ann(k: int = 1, nlist: int = 1, nprobe: int = 1, dim: int = 0, m: int
         raise ValueError(f"dim {dim} not divisible by m {m}")
 
 
+def _check_screen(threshold: float, bands: int = 1, band_bits: int | None = 1):
+    """Reject bad cosine-screen arguments before the first Spark job: a
+    threshold outside cosine's range [-1, 1] would silently keep every
+    pair or none."""
+    if not -1.0 <= threshold <= 1.0:
+        raise ValueError(f"threshold must be in [-1, 1], got {threshold}")
+    for name, v in (("bands", bands), ("band_bits", band_bits)):
+        if v is not None and v < 1:
+            raise ValueError(f"{name} must be >= 1, got {v}")
+
+
 def _topk(scored: DataFrame, score: str, k: int) -> DataFrame:
     """The one ranking stage: per query, ``score`` DESC then candidate
     id ASC, keep ranks 1..k of ``(query_id, cand_id, score, rank)``."""
@@ -110,6 +121,7 @@ def neardup_pairs(
 ) -> DataFrame:
     """Exact embedding near-duplicate pairs: cosine >= threshold,
     ``id_a < id_b``. All-pairs — use ``lsh_neardup_pairs`` at scale."""
+    _check_screen(threshold)
     a = ensure_parallelism(embeddings).select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
     )
@@ -204,6 +216,7 @@ def lsh_neardup_pairs(
     threshold.) Dropped-pair accounting:
     ``lsh_banding_audit(..., max_bucket_size=...)``.
     """
+    _check_screen(threshold, bands, band_bits)
     if band_bits is None:
         import math
 
@@ -1104,6 +1117,7 @@ def lsh_neardup_pairs_portable(
     Scale guards and their soundness: as :func:`lsh_neardup_pairs`;
     vectors are re-attached by id after candidate dedup, so the band
     join shuffles no embedding payloads."""
+    _check_screen(threshold, bands, band_bits)
     max_bucket_size = resolve_bucket_cap(embeddings, max_bucket_size, 4 * dim + 16)
     e, star, _ = _portable_banded_vecs(
         embeddings, bands, band_bits, id_col, vec_col, dim
@@ -1607,6 +1621,7 @@ def semantic_dedup_fixedpoint(
     (s >= floor(threshold*scale^2)) — no float-boundary flip between
     engines.
     """
+    _check_screen(threshold)
     thr_int = int(np.floor(threshold * float(scale) * float(scale)))
     if nlist is None:
         n = n_rows if n_rows is not None else embeddings.count()

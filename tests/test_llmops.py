@@ -1196,6 +1196,47 @@ def test_bad_ann_args_raise_before_any_spark_job(spark, case):
     assert set(tracker.getJobIdsForGroup(None)) == before
 
 
+_BAD_SCREEN_CALLS = {
+    "neardup_thr_high": (lambda e: SIM.neardup_pairs(e, threshold=1.5), "threshold"),
+    "neardup_thr_low": (lambda e: SIM.neardup_pairs(e, threshold=-1.5), "threshold"),
+    "neardup_thr_nan": (
+        lambda e: SIM.neardup_pairs(e, threshold=float("nan")), "threshold"
+    ),
+    "lsh_thr_high": (lambda e: SIM.lsh_neardup_pairs(e, threshold=1.5), "threshold"),
+    "lsh_bands0": (lambda e: SIM.lsh_neardup_pairs(e, bands=0), "bands must be"),
+    "lsh_band_bits0": (
+        lambda e: SIM.lsh_neardup_pairs(e, band_bits=0), "band_bits must be"
+    ),
+    "portable_thr_high": (
+        lambda e: SIM.lsh_neardup_pairs_portable(e, threshold=1.5), "threshold"
+    ),
+    "portable_bands0": (
+        lambda e: SIM.lsh_neardup_pairs_portable(e, bands=0), "bands must be"
+    ),
+    "portable_band_bits0": (
+        lambda e: SIM.lsh_neardup_pairs_portable(e, band_bits=0), "band_bits must be"
+    ),
+    "semdedup_fp_thr_high": (
+        lambda e: SIM.semantic_dedup_fixedpoint(e, threshold=1.5), "threshold"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_SCREEN_CALLS))
+def test_bad_screen_args_raise_before_any_spark_job(spark, case):
+    """A cosine-screen threshold outside [-1, 1], or fewer than one
+    band or band bit, is a ValueError raised before the first Spark
+    job, not an empty pair set (``semantic_dedup_fixedpoint``'s
+    default ``nlist`` would otherwise run a count first)."""
+    emb, _ = _ann_frames(spark)
+    call, match = _BAD_SCREEN_CALLS[case]
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match=match):
+        call(emb)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
 def test_corpus_clean_pipeline_stages_monotonic(spark, sf_dir):
     from multi_sensor_data_pipeline_for_robotics__spark.plans.corpus import (
         corpus_clean_pipeline,

@@ -91,9 +91,13 @@ def main():
 
     spark = get_session(app_name="check_oracles")
     # the oracles' spill files go to a private temp dir removed at exit,
-    # not to DuckDB's default .tmp/ under the working directory
+    # not to DuckDB's default .tmp/ under the working directory;
+    # compare() sorts both sides, so DuckDB need not keep insertion
+    # order, which costs it memory on large results
     spill = tempfile.TemporaryDirectory(prefix="check_oracles_duckdb_")
-    con = duckdb.connect(config={"temp_directory": spill.name})
+    con = duckdb.connect(
+        config={"temp_directory": spill.name, "preserve_insertion_order": False}
+    )
     try:
         n_fail = _check_all(spark, con, args)
     finally:
